@@ -66,8 +66,17 @@ object Par {
     * enough for the measured capstone wins (3-5-way store fan-outs),
     * narrow enough that nested sites cannot stack 10-20 concurrent
     * jobs. */
-  private val cap: Int =
-    sys.env.get("SPARK_GRAFT_PAR_CAP").map(_.toInt).getOrElse(4)
+  private val cap: Int = parseCap(sys.env.get("SPARK_GRAFT_PAR_CAP"))
+
+  /** `SPARK_GRAFT_PAR_CAP`'s value: unset → 4; a non-negative integer
+    * (0 = every call runs sequentially); anything else fails loud,
+    * naming the variable and the value it holds. */
+  private[graft] def parseCap(raw: Option[String]): Int = raw.fold(4) { v =>
+    val n = v.trim.toIntOption.getOrElse(-1)
+    require(n >= 0, s"SPARK_GRAFT_PAR_CAP must be a non-negative integer " +
+      s"(0 = sequential), got '$v'")
+    n
+  }
   private val permits = new Semaphore(cap)
 
   /** Run the thunks concurrently (bounded — see object doc), wait for

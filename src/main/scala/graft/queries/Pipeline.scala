@@ -21,6 +21,15 @@ import graft.sources.Tables
   */
 object Pipeline {
 
+  /** Every `outRoot/b<batchId>` output dir a streaming query wrote, read
+    * by explicit path from the listing (a `b*` glob makes Spark probe the
+    * glob for a streaming-sink log, which logs a WARN and a stack trace on
+    * the happy path). */
+  private def readBatches(spark: SparkSession, outRoot: String): DataFrame =
+    spark.read.parquet(graft.streaming.Versions
+      .listPrefixed(spark, outRoot, 'b').map(_._2.toString): _*)
+
+
   /** Shared tokenization contract, oracle side. Must mirror
     * [[graft.functions.TextFunctions.tokens]] exactly. */
   private val sqlToks =
@@ -2998,7 +3007,7 @@ object Pipeline {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.read.parquet(s"$outRoot/b*")
+    readBatches(spark, outRoot)
       .select(col("doc_id"), col("batch"), col("n_windows"),
         col("n_dup_windows"), col("dup_ratio"),
         (col("dup_ratio") < 0.5).as("kept"))
@@ -3337,7 +3346,7 @@ object Pipeline {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.read.parquet(s"$outRoot/b*")
+    readBatches(spark, outRoot)
       .select(col("id_a"), col("id_b"), col("jaccard"), col("batch"))
       .orderBy("id_a", "id_b")
   }
@@ -3783,7 +3792,7 @@ object Pipeline {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.read.parquet(s"$outRoot/b*")
+    readBatches(spark, outRoot)
       .select(col("user_id"), col("stage"), col("batch"))
       .orderBy("user_id", "batch")
   }
@@ -4000,7 +4009,7 @@ object Pipeline {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.read.parquet(s"$outRoot/b*")
+    readBatches(spark, outRoot)
       .select(col("user_id"), col("n_events"), col("ewma"), col("batch"))
       .orderBy("user_id", "batch")
   }
@@ -4071,7 +4080,7 @@ object Pipeline {
     graft.streaming.PassageStream.compactIndex(spark, idxRoot, upTo = 2L)
     writeDailyFilesRange(incoming, in, 3, Seq(2))
     drain()
-    spark.read.parquet(s"$outRoot/b*")
+    readBatches(spark, outRoot)
       .select(col("doc_id"), col("batch"), col("n_windows"),
         col("n_dup_windows"), col("dup_ratio"),
         (col("dup_ratio") < 0.5).as("kept"))
@@ -4277,7 +4286,7 @@ object Pipeline {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.read.parquet(s"$outRoot/b*")
+    readBatches(spark, outRoot)
       .select(col("batch"), col("cell"), col("n_points"), col("pos"),
         col("val"))
       .orderBy("batch", "cell", "pos")
@@ -5494,7 +5503,7 @@ object Pipeline {
       Seq(0.5, 0.9, 0.99))
     val exact = Profiling.histogramQuantiles(docs, "n_chars", 128,
       Seq(0.5, 0.9, 0.99), exact = true).select(col("q"), col("p_exact"))
-    val drift = spark.read.parquet(s"$profRoot/b*")
+    val drift = readBatches(spark, profRoot)
       .agg(sum(col("n_below")).as("n_below"),
         sum(col("n_above")).as("n_above"))
     est.join(exact, Seq("q"))
@@ -5761,7 +5770,7 @@ object Pipeline {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.read.parquet(s"$outRoot/b*")
+    readBatches(spark, outRoot)
       .select(col("doc_id"), col("batch"), col("n_candidate_grams"),
         col("n_shared_grams"))
       .orderBy("doc_id")
@@ -5919,7 +5928,7 @@ object Pipeline {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.read.parquet(s"$outRoot/b*")
+    readBatches(spark, outRoot)
       .select(col("doc_id"), col("batch"), col("contaminated"),
         col("quality_keep"), col("near_dup"), col("keep"))
       .orderBy("doc_id")
@@ -6206,7 +6215,7 @@ object Pipeline {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.read.parquet(s"$outRoot/b*")
+    readBatches(spark, outRoot)
       .select(col("id_a"), col("id_b"), col("hamming"), col("batch"))
       .orderBy("id_a", "id_b")
   }
@@ -6504,7 +6513,7 @@ object Pipeline {
       .start()
     q.awaitTermination()
     // the rebuild signal: clamped mass under the OLD bounds
-    val drift1 = spark.read.parquet(s"$root/prof1/b*")
+    val drift1 = readBatches(spark, s"$root/prof1")
       .agg(coalesce(sum(col("n_below")), lit(0L)).as("old_below"),
         coalesce(sum(col("n_above")), lit(0L)).as("old_above"))
     // rebuild: bounds re-derived over the CURRENT corpus, bins doubled,
@@ -6522,7 +6531,7 @@ object Pipeline {
       "n_chars")(
       docs.filter(col("doc_id") >= 375 && pmod(col("doc_id"), lit(2)) === 1)
         .select(col("doc_id"), col("n_chars")), 1L)
-    val drift2 = spark.read.parquet(s"$root/prof2/b*")
+    val drift2 = readBatches(spark, s"$root/prof2")
       .agg(coalesce(sum(col("n_below")), lit(0L)).as("new_below"),
         coalesce(sum(col("n_above")), lit(0L)).as("new_above"))
     val est = QuantileStream.quantilesAt(spark, bounds2, counts2,
@@ -6748,7 +6757,7 @@ object Pipeline {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.read.parquet(s"$outRoot/b*")
+    readBatches(spark, outRoot)
       .select(col("id_a"), col("id_b"), col("batch"))
       .orderBy("id_a", "id_b")
   }
@@ -6813,7 +6822,7 @@ object Pipeline {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.read.parquet(s"$outRoot/b*")
+    readBatches(spark, outRoot)
       .select(col("id_a"), col("id_b"), col("batch"))
       .orderBy("id_a", "id_b")
   }
@@ -7013,7 +7022,7 @@ object Pipeline {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.read.parquet(s"$outRoot/b*")
+    readBatches(spark, outRoot)
       .select(col("id_a"), col("id_b"), col("hamming"), col("batch"))
       .orderBy("id_a", "id_b")
   }
@@ -7121,7 +7130,7 @@ object Pipeline {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.read.parquet(s"$outRoot/b*")
+    readBatches(spark, outRoot)
       .select(col("id_a"), col("id_b"), col("containment"), col("batch"))
       .orderBy("id_a", "id_b")
   }
@@ -7306,7 +7315,7 @@ object Pipeline {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.read.parquet(s"$outRoot/b*")
+    readBatches(spark, outRoot)
       .select(col("media_id"), col("batch"), col("exact_dup"),
         col("percep_dup"), col("contained"), col("keep"))
       .orderBy("media_id")
@@ -7465,7 +7474,7 @@ object Pipeline {
     // codebooks — one foreachBatch body call IS the stream's batch 0
     PqStream.appendBatch(spark, book2, codes2, s"$root/out2",
       "vec_id", "embedding")(emb.filter(col("vec_id") >= 400), 0L)
-    val drifts = spark.read.parquet(s"$root/out1/b*")
+    val drifts = readBatches(spark, s"$root/out1")
       .agg(max(when(col("batch") === 0, col("err_sum"))).as("drift_b0"),
         max(when(col("batch") === 1, col("err_sum"))).as("drift_b1"))
       .crossJoin(spark.read.parquet(s"$root/out2/b0")
@@ -7655,7 +7664,7 @@ object Pipeline {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.read.parquet(s"$outRoot/b*")
+    readBatches(spark, outRoot)
       .select(col("id_a"), col("id_b"), col("containment"), col("batch"))
       .orderBy("id_a", "id_b")
   }
@@ -7754,7 +7763,7 @@ object Pipeline {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.read.parquet(s"$outRoot/b*")
+    readBatches(spark, outRoot)
       .select(col("id_a"), col("id_b"), col("jaccard"), col("batch"))
       .orderBy("id_a", "id_b")
   }
@@ -7929,7 +7938,7 @@ object Pipeline {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.read.parquet(s"$outRoot/b*")
+    readBatches(spark, outRoot)
       .select(col("id_a"), col("id_b"), col("containment"), col("batch"))
       .orderBy("id_a", "id_b")
   }
@@ -8222,7 +8231,7 @@ object Pipeline {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.read.parquet(s"$outRoot/b*")
+    readBatches(spark, outRoot)
       .select(col("id_a"), col("id_b"), col("hamming"), col("batch"))
       .orderBy("id_a", "id_b")
   }
@@ -8295,7 +8304,7 @@ object Pipeline {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.read.parquet(s"$outRoot/b*")
+    readBatches(spark, outRoot)
       .select(col("id_a"), col("id_b"), col("batch"))
       .orderBy("id_a", "id_b")
   }
@@ -8449,10 +8458,10 @@ object Pipeline {
       .collect().map(_.getString(0)).toSeq
     val ivfQueries = emb.filter(col("vec_id") < 5)
       .select((col("vec_id") + 10000).as("vec_id"), col("embedding"))
-    val nd = spark.read.parquet(s"$ndOut/b*")
+    val nd = readBatches(spark, ndOut)
       .select(lit("nd").as("store"), col("id_a").as("a"),
         col("id_b").as("b"), col("batch"), col("jaccard").as("v"))
-    val ct = spark.read.parquet(s"$ctOut/b*")
+    val ct = readBatches(spark, ctOut)
       .select(lit("ct").as("store"), col("id_a").as("a"),
         col("id_b").as("b"), col("batch"), col("containment").as("v"))
     val bm = RetrievalStream.bm25TopK(spark, bmRoot, qTerms, k = 40)
@@ -9135,7 +9144,7 @@ object Pipeline {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.read.parquet(s"$outRoot/b*")
+    readBatches(spark, outRoot)
       .select(col("id_a"), col("id_b"), col("hamming"), col("batch"))
       .orderBy("id_a", "id_b")
   }
@@ -9251,13 +9260,8 @@ object Pipeline {
           // fold time.
           // r18: the verdict resolves from the fold's JUST-WRITTEN deltas
           // instead of the full-store reads (each a window fold + eager
-          // checkpoint per trigger) — result-identical because the fold
-          // guarantees every batch doc an assign row in v{id+1}
-          // (newInPairs ∪ newSingles = the whole batch; the empty-pairs
-          // path writes all of it too) and every such doc's cid a live
-          // election row there (electCanon runs over ALL touched labels'
-          // full membership, new singletons included), and v{id+1} is by
-          // construction the newest version for exactly those ids/cids.
+          // checkpoint per trigger) — result-identical under foldBatch's
+          // single-arrival precondition (see its scaladoc).
           graft.streaming.Versions.read(spark, s"$csRoot/assign",
               Seq(s"$csRoot/assign/v${id + 1}"))
             .join(broadcast(b.select(col("doc_id").as("id"))), Seq("id"),
@@ -9278,7 +9282,7 @@ object Pipeline {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.read.parquet(s"$outRoot/b*")
+    readBatches(spark, outRoot)
       .select(lit("v").as("part"), col("doc_id").as("a"),
         col("keep_id").as("b"), col("batch").cast("long").as("n"),
         col("keep").as("v"))
@@ -9451,7 +9455,7 @@ object Pipeline {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.read.parquet(s"$outRoot/b*")
+    readBatches(spark, outRoot)
       .select(col("id_a"), col("id_b"), col("jaccard"), col("batch"))
       .orderBy("id_a", "id_b")
   }
@@ -9609,13 +9613,8 @@ object Pipeline {
             pairs.select(col("id_a"), col("id_b")), id)
           // r18: the verdict resolves from the fold's JUST-WRITTEN deltas
           // instead of the full-store reads (each a window fold + eager
-          // checkpoint per trigger) — result-identical because the fold
-          // guarantees every batch doc an assign row in v{id+1}
-          // (newInPairs ∪ newSingles = the whole batch; the empty-pairs
-          // path writes all of it too) and every such doc's cid a live
-          // election row there (electCanon runs over ALL touched labels'
-          // full membership, new singletons included), and v{id+1} is by
-          // construction the newest version for exactly those ids/cids.
+          // checkpoint per trigger) — result-identical under foldBatch's
+          // single-arrival precondition (see its scaladoc).
           graft.streaming.Versions.read(spark, s"$csRoot/assign",
               Seq(s"$csRoot/assign/v${id + 1}"))
             .join(broadcast(b.select(col("doc_id").as("id"))), Seq("id"),
@@ -9636,7 +9635,7 @@ object Pipeline {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.read.parquet(s"$outRoot/b*")
+    readBatches(spark, outRoot)
       .select(lit("v").as("part"), col("doc_id").as("a"),
         col("keep_id").as("b"), col("batch").cast("long").as("n"),
         col("keep").as("v"))

@@ -33,12 +33,18 @@ import graft.multimodal.Multimodal
   * shingles do, so the cross arm needs no occupancy cap; the in-batch
   * arm keeps [[Dedup.hammingPairs64]]'s.)
   *
-  * Exactly-once contract is the family's: batch-id-named deltas,
-  * deterministic overwrite on redelivery, lineage-fork guard. */
+  * The store is a [[DeltaStore]]: identity fold (rows unique across
+  * deltas), tombstones on `media_id`, and no probe-key clustering — the
+  * probe bands the 64-bit hashes IN-SCAN into 28 chunk-pair keys and
+  * pushes no stored-column predicate, so no sort order of (media_id,
+  * ahash) can gain it row-group pruning (the standing scan is inherently
+  * full, and 16 bytes/image cheap). */
 object AHashStream {
 
-  /** Hash the standing corpus's media and write `root/v0`
-    * (live-root-guarded: [[Versions.guardStandingWrite]]). `hasher` maps
+  private def store(root: String) =
+    DeltaStore(root, "hash index", idCol = Some("media_id"))
+
+  /** Hash the standing corpus's media and write `root/v0`. `hasher` maps
     * a (id, payload) frame to (media_id, 64-bit hash) — the image aHash
     * by default (p117); the audio windowed-amplitude hash for the p126
     * sibling. Everything downstream (banding, pigeonhole guarantee,
@@ -46,32 +52,18 @@ object AHashStream {
   def writeStanding(spark: SparkSession, root: String, images: DataFrame,
       idCol: String = "media_id", payloadCol: String = "payload",
       hasher: (DataFrame, String, String) => DataFrame =
-        Multimodal.aHash64Bytes): Unit = {
-    Versions.guardStandingWrite(spark, root)
-    hasher(images, idCol, payloadCol)
-      .write.mode("overwrite").parquet(s"$root/v0")
-  }
+        Multimodal.aHash64Bytes): Unit =
+    store(root).writeStanding(spark, hasher(images, idCol, payloadCol))
 
-  /** The assembled hash index: every delta `<= upTo`, a plain scan union
-    * (rows unique across deltas by construction — each image arrives in
-    * exactly one batch), minus tombstoned ids
-    * ([[Versions.maskTombstones]] — broadcast anti-join; the plan is
-    * untouched when no takedown ever happened). */
+  /** The assembled hash index ([[DeltaStore.read]]). */
   def readIndex(spark: SparkSession, root: String,
-      upTo: Long = Long.MaxValue): DataFrame = {
-    val versions = Versions.list(spark, root).filter(_._1 <= upTo)
-    require(versions.nonEmpty, s"no index versions at $root")
-    Versions.maskTombstones(spark, root,
-      Versions.read(spark, root, versions.map(_._2.toString)), "media_id",
-      upTo)
-  }
+      upTo: Long = Long.MaxValue): DataFrame = store(root).read(spark, upTo)
 
-  /** Retract ids from the hash index ([[Versions.tombstone]] contract):
-    * probes from marker batch `batchId` on stop pairing against their
-    * hashes; [[compactStore]] drops the rows physically. */
+  /** Retract ids from the hash index: probes from marker batch `batchId`
+    * on stop pairing against their hashes. */
   def tombstone(spark: SparkSession, root: String, ids: Seq[Long],
       batchId: Long): Unit =
-    Versions.tombstone(spark, root, ids, batchId)
+    store(root).tombstone(spark, ids, batchId)
 
   /** The `foreachBatch` callback: hash batch `batchId`'s images, emit its
     * near-dup pairs (in-batch + against everything earlier) to
@@ -104,11 +96,7 @@ object AHashStream {
       s"maxHamming $maxHamming exceeds the 28-band chunk-pair guarantee " +
         "(Hamming <= 6 by pigeonhole); beyond it candidates are incomplete " +
         "and streamed pairs would not replay")
-    Versions.guardAppend(spark, root, "hash index", batchId,
-      "writeStanding before starting the stream")
-    autoCompactVersions.foreach(k =>
-      Versions.autoCompact(spark, root, batchId, k,
-        tombstoneIdCol = Some("media_id")))
+    store(root).beginBatch(spark, batchId, autoCompactVersions)
     val bh = hasher(batch, idCol, payloadCol)
       .localCheckpoint(true)
     // maxBucketSize = unbounded: the oracle replays UNCAPPED exact pairs,
@@ -148,17 +136,11 @@ object AHashStream {
     // completion subset redelivery-recoverable) — overlap them (guide §2.6)
     graft.core.Par.run(
       () => pairs.write.mode("overwrite").parquet(s"$outRoot/b$batchId"),
-      () => bh.write.mode("overwrite").parquet(s"$root/v${batchId + 1}"))
+      () => bh.write.mode("overwrite").parquet(store(root).deltaPath(batchId)))
     pairs
   }
 
-  /** Fold deltas `v0..v<upTo>` into a new base (rows unique across
-    * deltas ⇒ the identity fold is read-equivalent), physically dropping
-    * tombstoned ids (markers consumed — [[Versions.compact]]). No probe-
-    * key clustering: the probe bands the 64-bit hashes IN-SCAN into 28
-    * chunk-pair keys and pushes no stored-column predicate, so no sort
-    * order of (media_id, ahash) can gain it row-group pruning — the
-    * standing scan is inherently full (and 16 bytes/image cheap). */
+  /** Fold deltas `v0..v<upTo>` into a new base ([[DeltaStore.compact]]). */
   def compactStore(spark: SparkSession, root: String, upTo: Long): Unit =
-    Versions.compact(spark, root, upTo, tombstoneIdCol = Some("media_id"))
+    store(root).compact(spark, upTo)
 }

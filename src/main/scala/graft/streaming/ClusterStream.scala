@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.SteadyLit
 
@@ -55,9 +54,23 @@ import graft.operators.Dedup
   * connectedComponentsStar / canonicalPerCluster. */
 object ClusterStream {
 
-  private def assignRoot(root: String) = s"$root/assign"
-  private def canonRoot(root: String) = s"$root/canon"
-  private def pairsRoot(root: String) = s"$root/pairs"
+  /** The three [[DeltaStore]]s. Assignments compact back to one row per id
+    * (newest wins), drop tombstoned docs and CLUSTER by `cid` (the fold's
+    * membership reads prune by a pushed cid predicate); canonicals to one
+    * live row per cid; pairs drop tombstoned ids on BOTH endpoints at
+    * compaction ([[compactStore]]). */
+  private def assignStore(root: String) = DeltaStore(s"$root/assign",
+    "cluster assignments", Versions.newestBy("id"), Some("id"), Seq("cid"),
+    "ClusterStream.writeStanding before starting the stream")
+  private def canonStore(root: String) = DeltaStore(s"$root/canon",
+    "cluster canonicals",
+    df => Versions.newestBy("cid")(df).filter(col("n_members") > 0),
+    clusterBy = Seq("cid"))
+  private def pairsStore(root: String) =
+    DeltaStore(s"$root/pairs", "cluster pairs", idCol = Some("id_a"))
+  private def assignRoot(root: String) = assignStore(root).root
+  private def canonRoot(root: String) = canonStore(root).root
+  private def pairsRoot(root: String) = pairsStore(root).root
 
   /** Bootstrap: batch-solve the standing corpus with the batch kernels and
     * write the three `v0`s. `standingDocs` is (idCol, scoreCol); every doc
@@ -67,14 +80,11 @@ object ClusterStream {
       standingDocs: DataFrame, standingPairs: DataFrame,
       idCol: String = "id", scoreCol: String = "score",
       lease: Option[Versions.Lease] = None): Unit = {
-    Seq(assignRoot(root), canonRoot(root), pairsRoot(root))
-      .foreach(Versions.guardStandingWrite(spark, _, lease))
+    Seq(assignStore(root), canonStore(root), pairsStore(root))
+      .foreach(_.guardStanding(spark, lease))
     val pairs = standingPairs.select(col("id_a"), col("id_b"))
       .localCheckpoint(true)
-    val labels =
-      if (pairs.isEmpty) spark.emptyDataFrame
-        .select(lit(0L).as("id"), lit(0L).as("component")).limit(0)
-      else Dedup.connectedComponentsStar(pairs)
+    val labels = components(spark, pairs)
     val assign = standingDocs
       .select(col(idCol).as("id"), col(scoreCol).cast("double").as("score"))
       .join(labels, Seq("id"), "left")
@@ -92,6 +102,19 @@ object ClusterStream {
       },
       () => pairs.write.mode("overwrite").parquet(s"${pairsRoot(root)}/v0"))
   }
+
+  /** Min-id component labels (id, component) of a materialized pair
+    * relation — empty for no pairs. */
+  private def components(spark: SparkSession, pairs: DataFrame): DataFrame =
+    if (pairs.isEmpty) spark.emptyDataFrame
+      .select(lit(0L).as("id"), lit(0L).as("component")).limit(0)
+    else Dedup.connectedComponentsStar(pairs)
+
+  /** Dead election rows (n_members = 0) for labels that merged away or
+    * lost every retained member — reads stay append-only. */
+  private def deadCanon(cids: DataFrame, v: Long): DataFrame =
+    cids.select(col("cid"), lit(-1L).as("keep_id"), lit(0.0).as("score"),
+      lit(0L).as("n_members"), SteadyLit.steadyLong(v).as("__v"))
 
   /** Argmax-score (tie → min id) election + member count per cid — the
     * [[Dedup.canonicalPerCluster]] rule over an assignment slice, in AGG
@@ -131,69 +154,50 @@ object ClusterStream {
   private def readAssignmentsMasked(spark: SparkSession, root: String,
       upTo: Long, maskUpTo: Long): DataFrame = {
     val ar = assignRoot(root)
-    val versions = Versions.list(spark, ar).filter(_._1 <= upTo)
-    require(versions.exists(_._1 == 0L), s"no assignment base at $ar/v0")
-    requireRepairedRevives(spark, root)
-    val base = Versions.read(spark, ar,
-      versions.filter(_._1 == 0L).map(_._2.toString))
-    val deltaDirs = versions.filter(_._1 > 0L).map(_._2.toString)
-    val current =
-      if (deltaDirs.isEmpty) base
-      else {
-        val w = Window.partitionBy(col("id")).orderBy(col("__v").desc)
-        val newest = Versions.read(spark, ar, deltaDirs)
-          .withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1).drop("__rn")
-          .localCheckpoint(true)
-        base.join(broadcast(newest.select(col("id"))), Seq("id"),
-            "left_anti")
-          .unionByName(newest)
-      }
+    val current = newestOverBase(spark, ar, "assignment", "id", upTo,
+      requireRepairedRevives(spark, root))
     Versions.maskTombstones(spark, ar,
       current.select(col("id"), col("cid"), col("score"), col("__v")),
       "id", maskUpTo)
   }
 
-  /** Current elections: newest row per cid, dead labels (n_members = 0)
-    * dropped. Same read posture as [[readAssignments]]: the base holds
-    * one row per cid (writeStanding/compact invariant), so the
-    * newest-per-cid window runs over the DELTAS only and the base joins
-    * back through a broadcast anti-join — never a store-wide window. */
-  def readCanonicals(spark: SparkSession, root: String,
-      upTo: Long = Long.MaxValue): DataFrame = {
-    val cr = canonRoot(root)
-    val versions = Versions.list(spark, cr).filter(_._1 <= upTo)
-    require(versions.exists(_._1 == 0L), s"no canonical base at $cr/v0")
-    val base = Versions.read(spark, cr,
+  /** The read posture shared by assignments and elections: the base `v0`
+    * holds one row per `key` (the writeStanding/compact invariant), so
+    * the newest-per-key window runs over the DELTAS `<= upTo` only and
+    * the base joins back through a broadcast anti-join — never a
+    * store-wide window. `check` runs after the base check. */
+  private def newestOverBase(spark: SparkSession, root: String, what: String,
+      key: String, upTo: Long, check: => Unit = ()): DataFrame = {
+    val versions = Versions.list(spark, root).filter(_._1 <= upTo)
+    require(versions.exists(_._1 == 0L), s"no $what base at $root/v0")
+    check
+    val base = Versions.read(spark, root,
       versions.filter(_._1 == 0L).map(_._2.toString))
     val deltaDirs = versions.filter(_._1 > 0L).map(_._2.toString)
-    val current =
-      if (deltaDirs.isEmpty) base
-      else {
-        val w = Window.partitionBy(col("cid")).orderBy(col("__v").desc)
-        val newest = Versions.read(spark, cr, deltaDirs)
-          .withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1).drop("__rn")
-          .localCheckpoint(true)
-        base.join(broadcast(newest.select(col("cid"))), Seq("cid"),
-            "left_anti")
-          .unionByName(newest)
-      }
-    current.filter(col("n_members") > 0)
-      .select(col("cid"), col("keep_id"), col("score"), col("n_members"))
+    if (deltaDirs.isEmpty) base
+    else {
+      val newest = Versions.newestBy(key)(Versions.read(spark, root,
+        deltaDirs)).localCheckpoint(true)
+      base.join(broadcast(newest.select(col(key))), Seq(key), "left_anti")
+        .unionByName(newest)
+    }
   }
+
+  /** Current elections: newest row per cid ([[newestOverBase]]), dead
+    * labels (n_members = 0) dropped. */
+  def readCanonicals(spark: SparkSession, root: String,
+      upTo: Long = Long.MaxValue): DataFrame =
+    newestOverBase(spark, canonRoot(root), "canonical", "cid", upTo)
+      .filter(col("n_members") > 0)
+      .select(col("cid"), col("keep_id"), col("score"), col("n_members"))
 
   /** The folded pair relation, pairs touching a tombstoned id masked on
     * BOTH endpoints. */
   def readPairs(spark: SparkSession, root: String,
       upTo: Long = Long.MaxValue): DataFrame = {
-    val pr = pairsRoot(root)
-    val versions = Versions.list(spark, pr).filter(_._1 <= upTo)
-    require(versions.nonEmpty, s"no pair versions at $pr")
     requireRepairedRevives(spark, root)
-    val raw = Versions.read(spark, pr, versions.map(_._2.toString))
-    Versions.maskTombstones(spark, pr,
-      Versions.maskTombstones(spark, pr, raw, "id_a", upTo), "id_b", upTo)
+    Versions.maskTombstones(spark, pairsRoot(root),
+      pairsStore(root).read(spark, upTo), "id_b", upTo)
   }
 
   /** This store's takedown/revive verbs pair their markers with
@@ -246,18 +250,28 @@ object ClusterStream {
     * resolve to their cids (cid = min member id, so the merged label is
     * the min over batch ids and touched cids), star contraction runs on
     * the BATCH-LOCAL contracted graph, and only clusters whose label
-    * changes are rewritten. The standing corpus never re-clusters. */
+    * changes are rewritten. The standing corpus never re-clusters.
+    *
+    * Precondition — SINGLE ARRIVAL: every id in `batchDocs` is new to the
+    * store (the family's ids-are-ingest-events discipline; re-crawled
+    * content arrives under a fresh id, [[Takedown.guardReingest]]). Under
+    * it the batch's deltas `v{batchId+1}` hold exactly one assign row per
+    * batch doc (new docs plus relabeled OLD members, disjoint sets) and a
+    * live election row for each such doc's cid, and they are the newest
+    * version for exactly those ids/cids — so a caller may resolve a batch
+    * doc's verdict from the two just-written deltas alone instead of the
+    * full-store reads (p145/p147 do). A redelivered id whose cluster is
+    * relabeled would get TWO rows in the assign delta (its relabel and
+    * its arrival); the full [[readAssignments]] still resolves it, a
+    * delta-only read would not. */
   def foldBatch(spark: SparkSession, root: String, idCol: String = "id",
       scoreCol: String = "score", pushCidLimit: Int = 1024,
       lease: Option[Versions.Lease] = None)(
       batchDocs: DataFrame, batchPairs: DataFrame, batchId: Long): Unit = {
     val ar = assignRoot(root); val cr = canonRoot(root)
     val pr = pairsRoot(root)
-    Versions.guardAppend(spark, ar, "cluster assignments", batchId,
-      "ClusterStream.writeStanding before starting the stream", lease)
-    Versions.guardAppend(spark, cr, "cluster canonicals", batchId,
-      lease = lease)
-    Versions.guardAppend(spark, pr, "cluster pairs", batchId, lease = lease)
+    Seq(assignStore(root), canonStore(root), pairsStore(root))
+      .foreach(_.beginBatch(spark, batchId, lease = lease))
     // pairs touching a tombstoned id are masked on BOTH endpoints
     // (broadcast, takedown-sized) — an upstream pair generator that has
     // not seen the takedown yet could otherwise make a deleted doc look
@@ -381,9 +395,7 @@ object ClusterStream {
       // ones
       () => electCanon(allMembers.select(col("id"), col("__nl").as("cid"),
           col("score")), v)
-        .unionByName(touched.filter(col("cid") =!= col("__nl"))
-          .select(col("cid"), lit(-1L).as("keep_id"), lit(0.0).as("score"),
-            lit(0L).as("n_members"), SteadyLit.steadyLong(v).as("__v")))
+        .unionByName(deadCanon(touched.filter(col("cid") =!= col("__nl")), v))
         .write.mode("overwrite").parquet(s"$cr/v$v"),
       () => bp.write.mode("overwrite").parquet(s"$pr/v$v"))
   }
@@ -401,16 +413,11 @@ object ClusterStream {
   def retract(spark: SparkSession, root: String, ids: DataFrame,
       batchId: Long, pushCidLimit: Int = 1024,
       lease: Option[Versions.Lease] = None): Unit = {
-    val ar = assignRoot(root); val cr = canonRoot(root)
-    val v = batchId + 1
+    val ar = assignRoot(root)
     // same lineage guards as the fold: a fresh checkpoint replaying an
     // old batch over newer deltas would fork the repair's lineage
-    Versions.guardAppend(spark, ar, "cluster assignments", batchId,
-      "ClusterStream.writeStanding before retracting", lease)
-    Versions.guardAppend(spark, cr, "cluster canonicals", batchId,
-      lease = lease)
-    val del = ids.toDF("id").select(col("id").cast("long").as("id"))
-      .filter(col("id").isNotNull).distinct().localCheckpoint(true)
+    guardRepair(spark, root, batchId, lease)
+    val del = Versions.idRelation(ids, "retract").localCheckpoint(true)
     // affected components: the deleted docs' rows must stay visible to
     // THIS resolution even on redelivery (this batch's own marker may
     // already exist), so the mask stops strictly before batchId
@@ -460,12 +467,8 @@ object ClusterStream {
       batchId: Long, pushCidLimit: Int = 1024,
       lease: Option[Versions.Lease] = None): Unit = {
     val ar = assignRoot(root); val pr = pairsRoot(root)
-    Versions.guardAppend(spark, ar, "cluster assignments", batchId,
-      "ClusterStream.writeStanding before reviving", lease)
-    Versions.guardAppend(spark, canonRoot(root), "cluster canonicals",
-      batchId, lease = lease)
-    val rel = ids.toDF("id").select(col("id").cast("long").as("id"))
-      .filter(col("id").isNotNull).distinct().localCheckpoint(true)
+    guardRepair(spark, root, batchId, lease)
+    val rel = Versions.idRelation(ids, "revive").localCheckpoint(true)
     // independent marker roots — overlap the two revive-marker writes
     // (guide §2.6); the repair below reads both post-marker views
     graft.core.Par.run(
@@ -491,6 +494,13 @@ object ClusterStream {
     repairComponents(spark, root, affected, batchId, pushCidLimit)
   }
 
+  /** The lineage guards of a repair: its deltas land on the assign and
+    * canon roots only. */
+  private def guardRepair(spark: SparkSession, root: String, batchId: Long,
+      lease: Option[Versions.Lease]): Unit =
+    Seq(assignStore(root), canonStore(root))
+      .foreach(_.beginBatch(spark, batchId, lease = lease))
+
   /** The shared component-local re-solve behind [[retract]] and
     * [[revive]]: read the affected cids' members and their retained
     * intra-member pairs from the post-marker view, re-run star
@@ -511,10 +521,7 @@ object ClusterStream {
       .join(memberIds.withColumnRenamed("id", "id_b"), Seq("id_b"),
         "left_semi")
       .localCheckpoint(true)
-    val labels =
-      if (keptPairs.isEmpty) spark.emptyDataFrame
-        .select(lit(0L).as("id"), lit(0L).as("component")).limit(0)
-      else Dedup.connectedComponentsStar(keptPairs)
+    val labels = components(spark, keptPairs)
     val resolved = members
       .join(labels, Seq("id"), "left")
       .select(col("id"), col("cid"),
@@ -531,31 +538,18 @@ object ClusterStream {
         .write.mode("overwrite").parquet(s"$ar/v$v"),
       () => electCanon(resolved.select(col("id"), col("__nl").as("cid"),
           col("score")), v)
-        .unionByName(affected.join(newLabels, Seq("cid"), "left_anti")
-          .select(col("cid"), lit(-1L).as("keep_id"), lit(0.0).as("score"),
-            lit(0L).as("n_members"), SteadyLit.steadyLong(v).as("__v")))
+        .unionByName(deadCanon(
+          affected.join(newLabels, Seq("cid"), "left_anti"), v))
         .write.mode("overwrite").parquet(s"$cr/v$v"))
   }
 
-  /** Fold all three roots' deltas into fresh bases: assignments back to
-    * one row per id (newest wins), tombstoned docs dropped physically and
-    * the base CLUSTERED by `cid` (the fold's membership reads prune by a
-    * pushed cid predicate); canonicals to one live row per cid; pairs with
-    * both-endpoint tombstone drops (the marker set is applied to BOTH
-    * columns before the id_a-keyed consumption — a one-column drop would
-    * resurrect the id_b rows once the markers are consumed). */
+  /** Fold all three roots' deltas into fresh bases with their declared
+    * folds; pairs drop tombstoned ids on both endpoints (the marker set is
+    * applied to BOTH columns before the id_a-keyed consumption — a
+    * one-column drop would resurrect the id_b rows once the markers are
+    * consumed). */
   def compactStore(spark: SparkSession, root: String, upTo: Long,
       lease: Option[Versions.Lease] = None): Unit = {
-    val newestPerId: DataFrame => DataFrame = { df =>
-      val w = Window.partitionBy(col("id")).orderBy(col("__v").desc)
-      df.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn")
-    }
-    val newestPerCid: DataFrame => DataFrame = { df =>
-      val w = Window.partitionBy(col("cid")).orderBy(col("__v").desc)
-      df.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1 && col("n_members") > 0).drop("__rn")
-    }
     val pr = pairsRoot(root)
     // allowSingle on all three roots: a marker-only history (retract/
     // revive with no interleaved folds) leaves one version + markers to
@@ -564,22 +558,18 @@ object ClusterStream {
     // The three per-root rewrites are independent (crash recovery is
     // already "re-run converges per root") — overlap them (guide §2.6).
     graft.core.Par.run(
-      () => Versions.compact(spark, assignRoot(root), upTo, newestPerId,
-        tombstoneIdCol = Some("id"), clusterBy = Seq("cid"),
-        allowSingle = true, lease = lease),
-      () => Versions.compact(spark, canonRoot(root), upTo, newestPerCid,
-        clusterBy = Seq("cid"), allowSingle = true, lease = lease),
+      () => assignStore(root).compact(spark, upTo, lease, allowSingle = true),
+      () => canonStore(root).compact(spark, upTo, lease, allowSingle = true),
       () => {
         // deadSet, not the raw marker union: a revived id's pair rows must
         // survive the physical fold (newest-verb-wins, the
         // RetrievalStream.compactStore discipline)
         val delIds = Versions.deadSet(spark, pr, upTo)
           .map(_.localCheckpoint(true))
-        Versions.compact(spark, pr, upTo,
-          df => delIds.fold(df)(d =>
+        pairsStore(root).copy(fold = df => delIds.fold(df)(d =>
             df.join(broadcast(d.withColumnRenamed("id", "id_b")),
-              Seq("id_b"), "left_anti")),
-          tombstoneIdCol = Some("id_a"), allowSingle = true, lease = lease)
+              Seq("id_b"), "left_anti")))
+          .compact(spark, upTo, lease, allowSingle = true)
       })
   }
 }

@@ -30,47 +30,39 @@ import graft.operators.Dedup
   * relation is read as a plain scan union and both standing-side joins
   * broadcast the batch side (see `containmentIncrementalFromSets` — the
   * df aggregation semi-restricts to the batch's own grams first), so the
-  * standing index never crosses a full exchange. Exactly-once contract
-  * is the family's: batch-id-named deltas, deterministic overwrite on
-  * redelivery, lineage-fork guard ([[Versions.guardAppend]]). */
+  * standing index never crosses a full exchange. The [[DeltaStore]]
+  * compacts by identity, drops tombstoned ids, and CLUSTERS the base by
+  * the probe key `g` so a small batch's pushed gram predicate skips most
+  * row groups of the standing scan the probe pays every trigger (the
+  * §6-documented linear term's layout lever). */
 object ContainmentStream {
+
+  private def store(root: String) = DeltaStore(root, "set index",
+    idCol = Some("id"), clusterBy = Seq("g"))
 
   private def explodeSets(sets: DataFrame): DataFrame =
     sets.select(col("id"), size(col("sh")).as("n"),
       explode(col("sh")).as("g"))
 
   /** Profile the standing corpus into its element-hash set relation and
-    * write `root/v0` (live-root-guarded). `setsOf` maps an (id,
-    * payload...) frame to (id, sh: array<string>) DISTINCT sets; rows
-    * with empty sets are dropped (the [[Dedup.jaccardShingleSets]]
-    * family contract — an empty probe set has no defined containment). */
+    * write `root/v0`. `setsOf` maps an (id, payload...) frame to (id,
+    * sh: array<string>) DISTINCT sets; rows with empty sets are dropped
+    * (the [[Dedup.jaccardShingleSets]] family contract — an empty probe
+    * set has no defined containment). */
   def writeStanding(spark: SparkSession, root: String, standing: DataFrame,
-      setsOf: DataFrame => DataFrame): Unit = {
-    Versions.guardStandingWrite(spark, root)
-    explodeSets(setsOf(standing).toDF("id", "sh")
-        .filter(size(col("sh")) > 0))
-      .write.mode("overwrite").parquet(s"$root/v0")
-  }
+      setsOf: DataFrame => DataFrame): Unit =
+    store(root).writeStanding(spark, explodeSets(
+      setsOf(standing).toDF("id", "sh").filter(size(col("sh")) > 0)))
 
-  /** The assembled set relation: every delta `<= upTo`, a plain scan
-    * union (rows unique across deltas — each item arrives in exactly one
-    * batch), minus tombstoned ids ([[Versions.maskTombstones]] — a
-    * broadcast anti-join; the plan is untouched when no takedown ever
-    * happened). */
+  /** The assembled set relation ([[DeltaStore.read]]). */
   def readIndex(spark: SparkSession, root: String,
-      upTo: Long = Long.MaxValue): DataFrame = {
-    val versions = Versions.list(spark, root).filter(_._1 <= upTo)
-    require(versions.nonEmpty, s"no index versions at $root")
-    Versions.maskTombstones(spark, root,
-      Versions.read(spark, root, versions.map(_._2.toString)), "id", upTo)
-  }
+      upTo: Long = Long.MaxValue): DataFrame = store(root).read(spark, upTo)
 
-  /** Retract ids from the set index ([[Versions.tombstone]] contract):
-    * every read and probe from marker batch `batchId` on stops seeing
-    * their sets; [[compactStore]] drops the rows physically. */
+  /** Retract ids from the set index: every read and probe from marker
+    * batch `batchId` on stops seeing their sets. */
   def tombstone(spark: SparkSession, root: String, ids: Seq[Long],
       batchId: Long): Unit =
-    Versions.tombstone(spark, root, ids, batchId)
+    store(root).tombstone(spark, ids, batchId)
 
   /** The `foreachBatch` callback: profile batch `batchId`'s media, emit
     * its directed containment pairs (in-batch + against everything
@@ -102,23 +94,13 @@ object ContainmentStream {
       materializePairs: Boolean = false,
       pushGramLimit: Int = 1024)(
       batch: DataFrame, batchId: Long): DataFrame = {
-    Versions.guardAppend(spark, root, "set index", batchId,
-      "writeStanding before starting the stream")
-    autoCompactVersions.foreach(k =>
-      Versions.autoCompact(spark, root, batchId, k,
-        tombstoneIdCol = Some("id"), clusterBy = Seq("g")))
+    store(root).beginBatch(spark, batchId, autoCompactVersions)
     val bsets = setsOf(batch).toDF("id", "sh")
       .filter(size(col("sh")) > 0)
       .localCheckpoint(true)
     val idx = readIndex(spark, root, upTo = batchId)
-    val restricted =
-      if (pushGramLimit <= 0) idx
-      else {
-        val grams = bsets.select(explode(col("sh")).as("g")).distinct()
-          .limit(pushGramLimit + 1).collect().map(_.getString(0)).toSeq
-        if (grams.size <= pushGramLimit) idx.filter(col("g").isin(grams: _*))
-        else idx
-      }
+    val restricted = DeltaStore.pushKeys(idx, "g",
+      bsets.select(explode(col("sh")).as("g")), pushGramLimit)
     // stageHits = false: trigger batches are trickle-sized and the
     // pushed gram IN above already prunes the standing scans — the
     // staging action costs more than the repeated pruned scans it
@@ -132,18 +114,11 @@ object ContainmentStream {
     graft.core.Par.run(
       () => pairs.write.mode("overwrite").parquet(s"$outRoot/b$batchId"),
       () => explodeSets(bsets)
-        .write.mode("overwrite").parquet(s"$root/v${batchId + 1}"))
+        .write.mode("overwrite").parquet(store(root).deltaPath(batchId)))
     pairs
   }
 
-  /** Fold deltas `v0..v<upTo>` into a new base (rows unique across
-    * deltas ⇒ the identity fold is read-equivalent), physically dropping
-    * tombstoned ids (markers consumed — [[Versions.compact]]), and
-    * CLUSTERING the base by the probe key `g` so a small batch's pushed
-    * gram predicate skips most row groups of the standing scan the probe
-    * pays every trigger (VERDICT r13 #2 — the §6-documented linear
-    * term's layout lever). */
+  /** Fold deltas `v0..v<upTo>` into a new base ([[DeltaStore.compact]]). */
   def compactStore(spark: SparkSession, root: String, upTo: Long): Unit =
-    Versions.compact(spark, root, upTo, tombstoneIdCol = Some("id"),
-      clusterBy = Seq("g"))
+    store(root).compact(spark, upTo)
 }

@@ -26,29 +26,24 @@ import graft.operators.Curation
   */
 object CorpusMaintenance {
 
-  private def versionsIn(spark: SparkSession, root: String): Seq[(Long, Path)] =
-    Versions.list(spark, root)
-
   /** Newest corpus version path, or None before the first write. */
   def latest(spark: SparkSession, root: String): Option[String] =
-    versionsIn(spark, root).lastOption.map(_._2.toString)
+    Versions.list(spark, root).lastOption.map(_._2.toString)
 
-  /** The `foreachBatch` callback: merge one delta micro-batch into the
-    * corpus at `root`, keyed by `keys`. Attach with
-    * `deltas.writeStream.foreachBatch(CorpusMaintenance.upsertBatch(spark, root, Seq("id")) _)`. */
-  def upsertBatch(spark: SparkSession, root: String, keys: Seq[String])(
-      batch: DataFrame, batchId: Long): Unit = {
-    // the single-writer contract applies to the snapshot store exactly
-    // like the delta stores (the merge rebases on the newest earlier
-    // version — two writers interleaving would silently drop one's
-    // rows): leased roots require the holder's scope
-    // (Versions.withLease around the foreachBatch body)
+  /** The snapshot-store prologue of [[upsertBatch]] and [[deleteBatch]]:
+    * the single-writer gate (the merge rebases on the newest earlier
+    * version — two writers interleaving would silently drop one's rows;
+    * leased roots require the holder's scope, `Versions.withLease` around
+    * the foreachBatch body), the fresh-checkpoint guard (batch ids restart
+    * at 0, so the merge would silently rebase onto v0 and overwrite newer
+    * history; a legitimate retry of batch N may see its own output vN+1,
+    * anything newer is forked lineage), then the rebase: the newest
+    * version written by an EARLIER batch, so a retried batch re-reads the
+    * same base and rewrites the same output. */
+  private def rebase(spark: SparkSession, root: String,
+      batchId: Long): Option[String] = {
     Versions.checkWriter(spark, root, None)
-    val versions = versionsIn(spark, root)
-    // guard against a FRESH checkpoint over an existing multi-version
-    // corpus: batch ids restart at 0, so the merge would silently rebase
-    // onto v0 and overwrite newer history. A legitimate retry of batch N
-    // may see its own output vN+1; anything newer means forked lineage.
+    val versions = Versions.list(spark, root)
     versions.lastOption.foreach { case (newest, _) =>
       require(newest <= batchId + 1,
         s"corpus at $root is at v$newest but the stream is replaying batch " +
@@ -56,13 +51,17 @@ object CorpusMaintenance {
           "corpus would overwrite newer versions; resume from the original " +
           "checkpoint or start a new corpus root")
     }
-    // base = newest version written by an EARLIER batch; a retried batch
-    // therefore re-reads the same base and rewrites the same output
-    val base = versions.filter(_._1 <= batchId).lastOption
-    val merged = base match {
-      case Some((_, path)) =>
-        Curation.upsert(Versions.read(spark, root, Seq(path.toString)),
-          batch, keys)
+    versions.filter(_._1 <= batchId).lastOption.map(_._2.toString)
+  }
+
+  /** The `foreachBatch` callback: merge one delta micro-batch into the
+    * corpus at `root`, keyed by `keys`. Attach with
+    * `deltas.writeStream.foreachBatch(CorpusMaintenance.upsertBatch(spark, root, Seq("id")) _)`. */
+  def upsertBatch(spark: SparkSession, root: String, keys: Seq[String])(
+      batch: DataFrame, batchId: Long): Unit = {
+    val merged = rebase(spark, root, batchId) match {
+      case Some(path) =>
+        Curation.upsert(Versions.read(spark, root, Seq(path)), batch, keys)
       case None => batch
     }
     merged.write.mode("overwrite").parquet(s"$root/v${batchId + 1}")
@@ -83,20 +82,11 @@ object CorpusMaintenance {
   def deleteBatch(spark: SparkSession, root: String, keys: Seq[String])(
       tombstones: DataFrame, batchId: Long): Unit = {
     import org.apache.spark.sql.functions.broadcast
-    Versions.checkWriter(spark, root, None)
-    val versions = versionsIn(spark, root)
-    versions.lastOption.foreach { case (newest, _) =>
-      require(newest <= batchId + 1,
-        s"corpus at $root is at v$newest but the stream is replaying batch " +
-          s"$batchId — restarting with a fresh checkpoint over an existing " +
-          "corpus would overwrite newer versions; resume from the original " +
-          "checkpoint or start a new corpus root")
-    }
-    val base = versions.filter(_._1 <= batchId).lastOption
+    val base = rebase(spark, root, batchId)
     require(base.nonEmpty,
       s"deleteBatch on $root with no corpus version to delete from — " +
         "the corpus must exist before rows can be retracted")
-    Versions.read(spark, root, Seq(base.get._2.toString))
+    Versions.read(spark, root, Seq(base.get))
       .join(broadcast(tombstones.select(keys.map(
         org.apache.spark.sql.functions.col): _*).distinct()),
         keys, "left_anti")
@@ -118,8 +108,7 @@ object CorpusMaintenance {
       s"keepLast must be >= 2 (redelivery rebases on the second-newest " +
         s"version), got $keepLast")
     Versions.checkWriter(spark, root, None)
-    val versions = versionsIn(spark, root)
-    val stale = versions.dropRight(keepLast)
+    val stale = Versions.list(spark, root).dropRight(keepLast)
     if (stale.nonEmpty) {
       val fs = new Path(root)
         .getFileSystem(spark.sessionState.newHadoopConf())

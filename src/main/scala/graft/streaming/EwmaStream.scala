@@ -18,8 +18,8 @@ import graft.operators.TimeSeries
   * start); `v{b+1}` holds only the keys batch b updated; a key's current
   * state is its highest-`__v` row. Redelivered batches rebase on versions
   * `<= batchId` and overwrite deterministically; a fresh checkpoint over
-  * existing deltas throws; [[compactState]] folds deltas into the base —
-  * all [[PassageStream]]'s exactly-once contract.
+  * existing deltas throws; [[compactState]] folds deltas into the base
+  * keeping each key's newest row — [[FunnelStream]]'s state store.
   *
   * Correctness of chaining: the EWMA recurrence is a LEFT fold, so
   * seeding a batch's fold with the carried accumulator replays the exact
@@ -36,22 +36,9 @@ object EwmaStream {
       keyCol: String, tsCol: String, tieCol: String, valCol: String,
       alpha: Double, autoCompactVersions: Option[Int] = None)(
       batch: DataFrame, batchId: Long): Unit = {
-    val versions = Versions.guardAppend(spark, stateRoot, "state", batchId,
-      "write it (empty for a cold start) before starting the stream")
-    val current = autoCompactVersions match {
-      case Some(k) => Versions.autoCompact(spark, stateRoot, batchId, k, df =>
-        df.withColumn("__rn", row_number().over(
-            org.apache.spark.sql.expressions.Window.partitionBy(keyCol)
-              .orderBy(col("__v").desc)))
-          .filter(col("__rn") === 1).drop("__rn"))
-      case None => versions
-    }
-    val prior = Versions.read(spark, stateRoot,
-        current.filter(_._1 <= batchId).map(_._2.toString))
-      .withColumn("__rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(keyCol)
-          .orderBy(col("__v").desc)))
-      .filter(col("__rn") === 1)
+    val s = FunnelStream.store(stateRoot, keyCol)
+    val prior = s.fold(Versions.read(spark, stateRoot,
+        s.beginBatch(spark, batchId, autoCompactVersions)))
       .select(col(keyCol), col("n_events").as("__pn"),
         col("ewma").as("__pe"))
     val updated = batch
@@ -82,18 +69,12 @@ object EwmaStream {
       () => updated
         .select(col(keyCol), col("n_events"), col("ewma"),
           SteadyLit.steadyLong(batchId + 1).as("__v"))
-        .write.mode("overwrite").parquet(s"$stateRoot/v${batchId + 1}"))
+        .write.mode("overwrite").parquet(s.deltaPath(batchId)))
   }
 
-  /** Merge state deltas `v0..v<upTo>` into a new base snapshot (see
-    * [[Versions.compact]] for the lineage-guard and safety contract),
-    * pruning superseded per-key rows exactly like
-    * [[FunnelStream.compactState]]. */
+  /** Merge state deltas `v0..v<upTo>` into a new base snapshot, pruning
+    * superseded per-key rows exactly like [[FunnelStream.compactState]]. */
   def compactState(spark: SparkSession, stateRoot: String, keyCol: String,
       upTo: Long): Unit =
-    Versions.compact(spark, stateRoot, upTo, df =>
-      df.withColumn("__rn", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy(keyCol)
-            .orderBy(col("__v").desc)))
-        .filter(col("__rn") === 1).drop("__rn"))
+    FunnelStream.compactState(spark, stateRoot, keyCol, upTo)
 }

@@ -23,8 +23,19 @@ import graft.operators.TimeSeries
   * The fold itself is [[TimeSeries.funnelFoldSql]] with the carried
   * stage as seed — definitionally the batch fold, which is what makes
   * the stream's final state equal the one-shot batch computation when
-  * batches partition the stream in time order. */
+  * batches partition the stream in time order.
+  *
+  * The store's compaction fold keeps each key's highest-`__v` row
+  * ([[Versions.newestBy]]), so compaction prunes every superseded stage
+  * row — the base shrinks to one row per key, keeping original `__v`
+  * values so later reads rank identically against post-compaction
+  * deltas. */
 object FunnelStream {
+
+  private[streaming] def store(stateRoot: String, keyCol: String) =
+    DeltaStore(stateRoot, "state", Versions.newestBy(keyCol),
+      standingHint = "write it (empty for a cold start) before starting " +
+        "the stream")
 
   /** The `foreachBatch` callback: advance stages through batch
     * `batchId`'s events, emit changed users to `outRoot/b<batchId>`,
@@ -33,22 +44,9 @@ object FunnelStream {
       keyCol: String, tsCol: String, tieCol: String, typeCol: String,
       steps: Seq[String], autoCompactVersions: Option[Int] = None)(
       batch: DataFrame, batchId: Long): Unit = {
-    val versions = Versions.guardAppend(spark, stateRoot, "state", batchId,
-      "write it (empty for a cold start) before starting the stream")
-    val current = autoCompactVersions match {
-      case Some(k) => Versions.autoCompact(spark, stateRoot, batchId, k, df =>
-        df.withColumn("__rn", row_number().over(
-            org.apache.spark.sql.expressions.Window.partitionBy(keyCol)
-              .orderBy(col("__v").desc)))
-          .filter(col("__rn") === 1).drop("__rn"))
-      case None => versions
-    }
-    val prior = Versions.read(spark, stateRoot,
-        current.filter(_._1 <= batchId).map(_._2.toString))
-      .withColumn("__rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(keyCol)
-          .orderBy(col("__v").desc)))
-      .filter(col("__rn") === 1)
+    val s = store(stateRoot, keyCol)
+    val prior = s.fold(Versions.read(spark, stateRoot,
+        s.beginBatch(spark, batchId, autoCompactVersions)))
       .select(col(keyCol), col("stage").as("__prior"))
     val advanced = batch
       .filter(col(keyCol).isNotNull)
@@ -74,20 +72,12 @@ object FunnelStream {
         .write.mode("overwrite").parquet(s"$outRoot/b$batchId"),
       () => advanced
         .select(col(keyCol), col("stage"), SteadyLit.steadyLong(batchId + 1).as("__v"))
-        .write.mode("overwrite").parquet(s"$stateRoot/v${batchId + 1}"))
+        .write.mode("overwrite").parquet(s.deltaPath(batchId)))
   }
 
-  /** Merge state deltas `v0..v<upTo>` into a new base snapshot (see
-    * [[Versions.compact]] for the lineage-guard and safety contract).
-    * The prior-state read keeps only each key's highest-`__v` row, so
-    * compaction prunes every superseded stage row — the base shrinks to
-    * one row per key, keeping original `__v` values so later reads rank
-    * identically against post-compaction deltas. */
+  /** Merge state deltas `v0..v<upTo>` into a new base snapshot
+    * ([[DeltaStore.compact]]). */
   def compactState(spark: SparkSession, stateRoot: String, keyCol: String,
       upTo: Long): Unit =
-    Versions.compact(spark, stateRoot, upTo, df =>
-      df.withColumn("__rn", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy(keyCol)
-            .orderBy(col("__v").desc)))
-        .filter(col("__rn") === 1).drop("__rn"))
+    store(stateRoot, keyCol).compact(spark, upTo)
 }

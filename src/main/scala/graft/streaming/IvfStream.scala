@@ -52,93 +52,48 @@ object IvfStream {
   // An index is bound to the CONTENT of the bank it was assigned under,
   // not merely to "a root holding exactly v0": point a stream (or a
   // probe session) at the wrong bankRoot — or at a same-named root
-  // retrained after a crash — and every guard below passes while recall
+  // retrained after a crash — and every shape guard passes while recall
   // silently collapses (assignments under one bank, probes under
-  // another). Every sibling store pins its model (SketchStream `_params`
-  // p/w, QuantileStream's frozen bounds); this is the same convention for
-  // the one store whose "parameters" are a relation: writeStanding
-  // records a model-sized content fingerprint of the frozen bank at
-  // `indexRoot/_params` (ignored by Versions.list's v\d+ filter and by
-  // compaction), and appendBatch / the bank-taking read path fail loud
-  // when the bank at hand doesn't hash to the pinned value.
+  // another). So writeStanding pins the frozen bank's content fingerprint
+  // at `indexRoot/_params` ([[DeltaStore.pinModel]]), and appendBatch /
+  // the bank-taking read path fail loud when the bank at hand doesn't
+  // hash to the pinned value.
 
-  /** Order-independent content fingerprint of a bank relation (cell, cv):
-    * (bit_xor over `fingerprint64` of each row's canonical
-    * `cell:v0,v1,...` rendering, row count) — one model-sized fold
-    * (≤ cells rows), deterministic across partitionings because XOR is
-    * commutative and the per-row rendering is value-only. The count rides
-    * along because XOR alone is blind to PAIRED duplicates (two copies of
-    * a row cancel: a bank with a crash-double-appended row would
-    * fingerprint identical to the clean bank); pinning (fp, n) together
-    * closes that hole. */
-  def bankFingerprint(bank: DataFrame): (Long, Long) = {
-    val row = bank
-      .select(graft.functions.HashFunctions.fingerprint64(concat_ws(":",
-          col("cell").cast("string"),
-          concat_ws(",", transform(col("cv").cast("array<double>"),
-            e => e.cast("string"))))).as("__fp"))
-      .agg(expr("bit_xor(__fp)").as("fp"), count(lit(1)).as("n"))
-      .head()
-    require(row.getLong(1) > 0, "cannot fingerprint an empty bank")
-    (row.getLong(0), row.getLong(1))
-  }
+  /** The assignment index: identity fold (rows unique across deltas — see
+    * the object scaladoc), tombstones on `neighbor_id`, and the base
+    * CLUSTERED by the probe key `cell` — probes that push their
+    * shortlisted cell ids into the standing scan then skip non-shortlist
+    * row groups. */
+  private def index(indexRoot: String) = DeltaStore(indexRoot, "index",
+    idCol = Some("neighbor_id"), clusterBy = Seq("cell"))
 
-  private def writeBankPin(spark: SparkSession, indexRoot: String,
-      fp: (Long, Long)): Unit = {
-    import spark.implicits._
-    Seq(("bank_fp", fp._1), ("bank_n", fp._2)).toDF("k", "v")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexRoot/_params")
-  }
+  /** Order-independent content fingerprint of a bank relation (cell, cv)
+    * ([[DeltaStore.fingerprint]]). */
+  def bankFingerprint(bank: DataFrame): (Long, Long) =
+    DeltaStore.fingerprint(bank, "bank", "cell")
 
   /** Fail loud unless the bank at `bankRoot/v0` hashes to the fingerprint
-    * pinned when `indexRoot` was built — the [[SketchStream]]
-    * `checkParams` pattern for a relation-valued model. */
+    * pinned when `indexRoot` was built. */
   def checkBank(spark: SparkSession, bankRoot: String,
-      indexRoot: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexRoot/_params")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(p),
-      s"$indexRoot/_params missing — writeStanding (which pins the " +
-        "fingerprint of the bank the index was assigned under) before " +
-        "appending or probing")
-    val pinRows = Versions.read(spark, s"$indexRoot/_params",
-      Seq(s"$indexRoot/_params"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    // a pin written by the pre-r12 single-row format carries only bank_fp;
-    // comparing it against today's (fp, n) would fail EVERY bank — even a
-    // byte-identical one — with a misleading "does not match" message, so
-    // name the real problem (ADVICE r12): the old pin cannot distinguish
-    // a crash-double-appended bank row (XOR pairs cancel), which is the
-    // hole count-pinning closed
-    require(pinRows.contains("bank_n"),
-      s"$indexRoot/_params predates count pinning (bank_fp only) — the " +
-        "old pin format cannot detect paired-duplicate bank rows; " +
-        "rebuildIndex into new roots (which re-pins (fp, n)) before " +
-        "appending or probing")
-    val pinned = (pinRows("bank_fp"), pinRows("bank_n"))
-    val actual = bankFingerprint(Versions.read(spark, bankRoot,
-      Seq(s"$bankRoot/v0")))
-    require(actual == pinned,
-      s"bank at $bankRoot does not match the bank $indexRoot was built " +
-        s"under (fingerprint/count $actual vs pinned $pinned) — assignments " +
-        "under one bank probed under another silently collapse recall; " +
-        "use the original bank root or rebuildIndex into new roots")
-  }
+      indexRoot: String): Unit =
+    index(indexRoot).checkModel(spark, "bank", bankRoot, "bank",
+      "assignments under one bank probed under another silently collapse " +
+        "recall", "cell")
 
   /** Write the standing stores: the trained bank as `bankRoot/v0`, the
     * standing corpus's assignment as `indexRoot/v0`, and the frozen
     * bank's content fingerprint as `indexRoot/_params` (the identity pin
     * [[checkBank]] verifies). Both roots must be fresh or hold exactly
-    * `v0` — overwriting a standing store under live deltas would mix
-    * lineages on read (the [[SketchStream]] standing-write guard). */
+    * `v0`. */
   def writeStanding(spark: SparkSession, bankRoot: String, indexRoot: String,
       standing: DataFrame, bank: DataFrame,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    Versions.guardStandingWrite(spark, bankRoot)
-    Versions.guardStandingWrite(spark, indexRoot)
+    val idx = index(indexRoot)
+    DeltaStore(bankRoot, "bank").guardStanding(spark)
+    idx.guardStanding(spark)
     bank.write.mode("overwrite").parquet(s"$bankRoot/v0")
     val frozen = Versions.read(spark, bankRoot, Seq(s"$bankRoot/v0"))
-    writeBankPin(spark, indexRoot, bankFingerprint(frozen))
+    idx.pinModel(spark, "bank", frozen, "bank", "cell")
     IvfRelational.assign(standing, frozen, idCol, vecCol)
       .select(col("id").as("neighbor_id"), col("cell"), col("v"))
       .write.mode("overwrite").parquet(s"$indexRoot/v0")
@@ -153,32 +108,21 @@ object IvfStream {
       outRoot: String, idCol: String, vecCol: String,
       autoCompactVersions: Option[Int] = None)(
       batch: DataFrame, batchId: Long): Unit = {
-    val bankVersions = Versions.list(spark, bankRoot)
-    require(bankVersions.map(_._1) == Seq(0L),
-      s"bank at $bankRoot must be exactly v0 (found " +
-        s"${bankVersions.map("v" + _._1).mkString(", ")}) — an index is " +
-        "bound to the bank it was built under; retrain into a NEW root " +
-        "and rebuild, never mutate a live bank")
-    Versions.guardAppend(spark, indexRoot, "index", batchId,
-      "writeStanding before starting the stream")
+    val idx = index(indexRoot)
+    Versions.requireFrozen(spark, bankRoot, "bank")
+    idx.beginBatch(spark, batchId)
     // identity, not just shape: the v0-only guard above catches a MUTATED
-    // bank root, this catches the WRONG one (or a same-named retrain) —
-    // one model-sized fold per batch. r18: the guard chain (checkBank's
-    // two model-sized actions, then compaction) and the batch's assign
-    // STAGING are independent — overlap them (guide §2.6). Ordering
-    // holds: the staging is block-manager state, not store state, so a
-    // failing guard still fails before any store write; compaction still
-    // runs strictly after its own thunk's checkBank.
+    // bank root, checkBank catches the WRONG one (or a same-named
+    // retrain) — one model-sized fold per batch. r18: the guard chain
+    // (checkBank's model-sized actions, then compaction) and the batch's
+    // assign STAGING are independent — overlap them (guide §2.6).
+    // Ordering holds: the staging is block-manager state, not store
+    // state, so a failing guard still fails before any store write;
+    // compaction still runs strictly after its own thunk's checkBank.
     val staged = graft.core.Par.eval(Seq[() => AnyRef](
       () => {
         checkBank(spark, bankRoot, indexRoot)
-        // same fold parameters as compactStore: tombstoned vectors drop
-        // physically and the base stays cell-clustered — an auto-compacted
-        // root must not silently lose the pruning layout or pay the marker
-        // mask forever
-        autoCompactVersions.foreach(k =>
-          Versions.autoCompact(spark, indexRoot, batchId, k,
-            tombstoneIdCol = Some("neighbor_id"), clusterBy = Seq("cell")))
+        idx.autoCompact(spark, batchId, autoCompactVersions)
         null
       },
       () => {
@@ -192,37 +136,28 @@ object IvfStream {
     // profile is advisory. The reverse order would let a crash between
     // the two writes leave a profile for a batch whose delta never
     // landed — phantom occupancy drift until redelivery overwrites both.
-    delta.write.mode("overwrite").parquet(s"$indexRoot/v${batchId + 1}")
+    delta.write.mode("overwrite").parquet(idx.deltaPath(batchId))
     delta.groupBy(col("cell")).agg(count(lit(1)).as("n_new"))
       .withColumn("batch", SteadyLit.steadyLong(batchId))
       .write.mode("overwrite").parquet(s"$outRoot/b$batchId")
   }
 
-  /** The assembled index visible to probes: every delta `<= upTo` (or all,
-    * by default), unioned PLAIN — rows are unique across deltas by
-    * construction (see the object scaladoc), so the read is a pure scan
-    * union with ZERO exchanges, and a probe joining it on `cell` against
-    * broadcast probes keeps the standing index exchange-free end to end
-    * (plan-gated in PlanSpec) — the [[graft.operators.Similarity
-    * .writeIvfIndex]] probe discipline. */
+  /** The assembled index visible to probes ([[DeltaStore.read]]): every
+    * delta `<= upTo`, unioned PLAIN with ZERO exchanges, so a probe
+    * joining it on `cell` against broadcast probes keeps the standing
+    * index exchange-free end to end (plan-gated in PlanSpec) — the
+    * [[graft.operators.Similarity.writeIvfIndex]] probe discipline. */
   def readIndex(spark: SparkSession, indexRoot: String,
-      upTo: Long = Long.MaxValue): DataFrame = {
-    val versions = Versions.list(spark, indexRoot).filter(_._1 <= upTo)
-    require(versions.nonEmpty, s"no index versions at $indexRoot")
-    Versions.maskTombstones(spark, indexRoot,
-      Versions.read(spark, indexRoot, versions.map(_._2.toString)),
-      "neighbor_id", upTo)
-  }
+      upTo: Long = Long.MaxValue): DataFrame =
+    index(indexRoot).read(spark, upTo)
 
-  /** Retract vector ids from the assignment index
-    * ([[Versions.tombstone]] contract): probes stop returning the
-    * retracted vectors; compaction drops their rows physically. The bank
-    * itself is a trained MODEL, not per-item state — it never needs
-    * retraction (and the rebuild lifecycle re-trains it from the
-    * remaining corpus when drift says so). */
+  /** Retract vector ids from the assignment index: probes stop returning
+    * the retracted vectors. The bank itself is a trained MODEL, not
+    * per-item state — it never needs retraction (the rebuild lifecycle
+    * re-trains it from the remaining corpus when drift says so). */
   def tombstone(spark: SparkSession, indexRoot: String, ids: Seq[Long],
       batchId: Long): Unit =
-    Versions.tombstone(spark, indexRoot, ids, batchId)
+    index(indexRoot).tombstone(spark, ids, batchId)
 
   /** The probe-session entry point: [[readIndex]] AFTER verifying that
     * the bank the probe intends to use is the one the index was assigned
@@ -255,12 +190,8 @@ object IvfStream {
   def rebuildIndex(spark: SparkSession, indexRoot: String,
       newBankRoot: String, newIndexRoot: String, nCells: Int,
       iters: Int = 3, stride: Int = 50, trainFraction: Double = 1.0): Unit = {
-    require(Versions.list(spark, newBankRoot).isEmpty,
-      s"rebuild target $newBankRoot already holds versions — rebuild " +
-        "writes a NEW root and readers swap; never rebuild into a live root")
-    require(Versions.list(spark, newIndexRoot).isEmpty,
-      s"rebuild target $newIndexRoot already holds versions — rebuild " +
-        "writes a NEW root and readers swap; never rebuild into a live root")
+    Versions.requireFresh(spark, newBankRoot)
+    Versions.requireFresh(spark, newIndexRoot)
     val corpus = readIndex(spark, indexRoot)
       .select(col("neighbor_id").as("vec_id"), col("v").as("embedding"))
     val train =
@@ -271,13 +202,8 @@ object IvfStream {
     writeStanding(spark, newBankRoot, newIndexRoot, corpus, bank)
   }
 
-  /** Fold index deltas `v0..v<upTo>` into a new base (see
-    * [[Versions.compact]] safety contract); rows unique across deltas ⇒
-    * the identity fold is read-equivalent. Tombstoned vectors drop
-    * physically (markers consumed) and the base CLUSTERS by the probe
-    * key `cell` — probes that push their shortlisted cell ids into the
-    * standing scan then skip non-shortlist row groups. */
+  /** Fold index deltas `v0..v<upTo>` into a new base
+    * ([[DeltaStore.compact]]). */
   def compactStore(spark: SparkSession, indexRoot: String, upTo: Long): Unit =
-    Versions.compact(spark, indexRoot, upTo,
-      tombstoneIdCol = Some("neighbor_id"), clusterBy = Seq("cell"))
+    index(indexRoot).compact(spark, upTo)
 }

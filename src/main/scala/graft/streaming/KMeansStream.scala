@@ -26,10 +26,8 @@ import java.math.BigDecimal
   * State store (`stateRoot/v*`, the [[Versions]] convention): rows
   * (cell, pos, s DECIMAL(38,18), n, __v). `v0` is the seeded state;
   * `v{b+1}` holds only the (cell, pos) rows batch b updated; current state
-  * is the highest-`__v` row per (cell, pos). Redelivery rebases on
-  * versions `<= batchId` and rewrites deterministically; the fresh-
-  * checkpoint lineage guard and [[compactState]] follow [[PassageStream]]'s
-  * exactly-once contract verbatim.
+  * is the highest-`__v` row per (cell, pos) — also the store's
+  * compaction fold ([[Versions.newestBy]]).
   *
   * Scale shape: the per-batch work is one assignment scan + one
   * (cell, dim)-keyed partial aggregation (at most K·dim rows per partition
@@ -38,6 +36,9 @@ import java.math.BigDecimal
   * lands on the driver.
   */
 object KMeansStream {
+
+  private def store(stateRoot: String) = DeltaStore(stateRoot, "state",
+    Versions.newestBy("cell", "pos"), standingHint = "writeSeedState first")
 
   private val stateSchema = StructType(Seq(
     StructField("cell", IntegerType, nullable = false),
@@ -77,23 +78,10 @@ object KMeansStream {
       idCol: String, vecCol: String, autoCompactVersions: Option[Int] = None)(
       batch: DataFrame, batchId: Long): Unit = {
     import graft.functions.VectorExpressions.nearestCentroids
-    val versions = Versions.guardAppend(spark, stateRoot, "state", batchId,
-      "writeSeedState first")
-    val current = autoCompactVersions match {
-      case Some(k) => Versions.autoCompact(spark, stateRoot, batchId, k, df =>
-        df.withColumn("__rn", row_number().over(
-            org.apache.spark.sql.expressions.Window.partitionBy("cell", "pos")
-              .orderBy(col("__v").desc)))
-          .filter(col("__rn") === 1).drop("__rn"))
-      case None => versions
-    }
+    val st = store(stateRoot)
     // Carried state: newest row per (cell, pos) across versions <= batchId.
-    val prior = Versions.read(spark, stateRoot,
-        current.filter(_._1 <= batchId).map(_._2.toString))
-      .withColumn("__rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("cell", "pos")
-          .orderBy(col("__v").desc)))
-      .filter(col("__rn") === 1)
+    val prior = st.fold(Versions.read(spark, stateRoot,
+        st.beginBatch(spark, batchId, autoCompactVersions)))
       .select(col("cell"), col("pos"), col("s"), col("n"))
       .collect()
     val sums = scala.collection.mutable.Map.empty[(Int, Int), BigDecimal]
@@ -143,15 +131,13 @@ object KMeansStream {
     perDim.filter(_.getInt(1) == 0).foreach { r =>
       counts(r.getInt(0)) = counts(r.getInt(0)) + r.getLong(3)
     }
-    val outRows = for {
-      cell <- touched.toSeq.sorted
-      pos <- 0 until dim
-    } yield Row(batchId, cell, counts(cell), pos,
-      sums((cell, pos)).doubleValue() / counts(cell))
-    val deltaRows = for {
-      cell <- touched.toSeq.sorted
-      pos <- 0 until dim
-    } yield Row(cell, pos, sums((cell, pos)), counts(cell), batchId + 1)
+    val keys = for (cell <- touched.toSeq.sorted; pos <- 0 until dim)
+      yield (cell, pos)
+    val outRows = keys.map { case k @ (cell, pos) =>
+      Row(batchId, cell, counts(cell), pos,
+        sums(k).doubleValue() / counts(cell)) }
+    val deltaRows = keys.map { case k @ (cell, pos) =>
+      Row(cell, pos, sums(k), counts(cell), batchId + 1) }
     // independent per-trigger writes of driver-built rows — overlap them
     // (guide §2.6)
     graft.core.Par.run(
@@ -160,15 +146,11 @@ object KMeansStream {
         .write.mode("overwrite").parquet(s"$outRoot/b$batchId"),
       () => spark.createDataFrame(
           spark.sparkContext.parallelize(deltaRows, 1), stateSchema)
-        .write.mode("overwrite").parquet(s"$stateRoot/v${batchId + 1}"))
+        .write.mode("overwrite").parquet(st.deltaPath(batchId)))
   }
 
-  /** Merge state deltas `v0..v<upTo>` into a new base (see
-    * [[Versions.compact]]), pruning superseded per-(cell, pos) rows. */
+  /** Merge state deltas `v0..v<upTo>` into a new base, pruning superseded
+    * per-(cell, pos) rows. */
   def compactState(spark: SparkSession, stateRoot: String, upTo: Long): Unit =
-    Versions.compact(spark, stateRoot, upTo, df =>
-      df.withColumn("__rn", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy("cell", "pos")
-            .orderBy(col("__v").desc)))
-        .filter(col("__rn") === 1).drop("__rn"))
+    store(stateRoot).compact(spark, upTo)
 }

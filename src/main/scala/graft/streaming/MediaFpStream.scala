@@ -25,46 +25,35 @@ import graft.functions.SteadyLit
   * p118's frame-hash chain): the emitted pairs are a pure function of
   * the fingerprint relation.
   *
-  * Store: `root/v*` — (media_id, fp) deltas (`v0` = standing). 16 bytes
-  * per clip/video at ANY payload size; payloads never enter the store
-  * and never shuffle (the probe joins fingerprints only). Exactly-once
-  * contract is the family's: batch-id-named deltas, deterministic
-  * overwrite on redelivery, lineage-fork guard. */
+  * Store: `root/v*` — (media_id, fp) deltas (`v0` = standing), a
+  * [[DeltaStore]] with the identity fold, tombstones on `media_id`, and
+  * the base CLUSTERED by the probe key `fp` (a small batch's fingerprint
+  * set pushed into the standing scan then skips most row groups). 16
+  * bytes per clip/video at ANY payload size; payloads never enter the
+  * store and never shuffle (the probe joins fingerprints only). */
 object MediaFpStream {
 
-  /** Fingerprint the standing corpus and write `root/v0`
-    * (live-root-guarded). `profiler` maps a (idCol, payload...) frame to
-    * (media_id, fp) — decode + fold, scan-shaped. */
+  private def store(root: String) = DeltaStore(root, "fingerprint index",
+    idCol = Some("media_id"), clusterBy = Seq("fp"))
+
+  /** Fingerprint the standing corpus and write `root/v0`. `profiler` maps
+    * a (idCol, payload...) frame to (media_id, fp) — decode + fold,
+    * scan-shaped. */
   def writeStanding(spark: SparkSession, root: String, standing: DataFrame,
-      profiler: DataFrame => DataFrame): Unit = {
-    Versions.guardStandingWrite(spark, root)
+      profiler: DataFrame => DataFrame): Unit =
     // store columns normalized to (media_id, fp) regardless of the
     // profiler's fingerprint column name — appendBatch joins on `fp`
-    profiler(standing).toDF("media_id", "fp")
-      .write.mode("overwrite").parquet(s"$root/v0")
-  }
+    store(root).writeStanding(spark, profiler(standing).toDF("media_id", "fp"))
 
-  /** The assembled fingerprint index: every delta `<= upTo`, a plain
-    * scan union (rows unique across deltas — each item arrives in
-    * exactly one batch), minus tombstoned ids
-    * ([[Versions.maskTombstones]] — broadcast anti-join; the plan is
-    * untouched when no takedown ever happened). */
+  /** The assembled fingerprint index ([[DeltaStore.read]]). */
   def readIndex(spark: SparkSession, root: String,
-      upTo: Long = Long.MaxValue): DataFrame = {
-    val versions = Versions.list(spark, root).filter(_._1 <= upTo)
-    require(versions.nonEmpty, s"no index versions at $root")
-    Versions.maskTombstones(spark, root,
-      Versions.read(spark, root, versions.map(_._2.toString)), "media_id",
-      upTo)
-  }
+      upTo: Long = Long.MaxValue): DataFrame = store(root).read(spark, upTo)
 
-  /** Retract ids from the fingerprint index ([[Versions.tombstone]]
-    * contract): probes from marker batch `batchId` on stop pairing
-    * against their fingerprints; [[compactStore]] drops the rows
-    * physically. */
+  /** Retract ids from the fingerprint index: probes from marker batch
+    * `batchId` on stop pairing against their fingerprints. */
   def tombstone(spark: SparkSession, root: String, ids: Seq[Long],
       batchId: Long): Unit =
-    Versions.tombstone(spark, root, ids, batchId)
+    store(root).tombstone(spark, ids, batchId)
 
   /** The `foreachBatch` callback: fingerprint batch `batchId`'s media,
     * emit its exact-dup pairs (in-batch + against everything earlier) to
@@ -100,11 +89,7 @@ object MediaFpStream {
       materializePairs: Boolean = false,
       pushFpLimit: Int = 1024)(
       batch: DataFrame, batchId: Long): DataFrame = {
-    Versions.guardAppend(spark, root, "fingerprint index", batchId,
-      "writeStanding before starting the stream")
-    autoCompactVersions.foreach(k =>
-      Versions.autoCompact(spark, root, batchId, k,
-        tombstoneIdCol = Some("media_id"), clusterBy = Seq("fp")))
+    store(root).beginBatch(spark, batchId, autoCompactVersions)
     val bf = profiler(batch).toDF("media_id", "fp").localCheckpoint(true)
     // in-batch: exact-fp SELF-JOIN — a heavily re-crawled identical
     // payload (the exact scenario this index targets) can form a k-copy
@@ -119,15 +104,8 @@ object MediaFpStream {
     // batch's fingerprints BROADCAST into the join — the standing index
     // never crosses a shuffle
     val idx = readIndex(spark, root, upTo = batchId)
-    val restricted =
-      if (pushFpLimit <= 0) idx
-      else {
-        val fps = bf.select(col("fp")).distinct()
-          .limit(pushFpLimit + 1).collect().map(_.getLong(0)).toSeq
-        if (fps.size <= pushFpLimit) idx.filter(col("fp").isin(fps: _*))
-        else idx
-      }
-    val cross = restricted
+    val cross = DeltaStore.pushKeys(idx, "fp", bf.select(col("fp")),
+        pushFpLimit)
       .join(broadcast(bf.select(col("media_id").as("new_id"),
         col("fp"))), Seq("fp"))
       // a batch id already present in the standing index (re-crawl under
@@ -144,16 +122,11 @@ object MediaFpStream {
     // completion subset redelivery-recoverable) — overlap them (guide §2.6)
     graft.core.Par.run(
       () => pairs.write.mode("overwrite").parquet(s"$outRoot/b$batchId"),
-      () => bf.write.mode("overwrite").parquet(s"$root/v${batchId + 1}"))
+      () => bf.write.mode("overwrite").parquet(store(root).deltaPath(batchId)))
     pairs
   }
 
-  /** Fold deltas `v0..v<upTo>` into a new base (rows unique across
-    * deltas ⇒ the identity fold is read-equivalent), physically dropping
-    * tombstoned ids (markers consumed) and CLUSTERING the base by the
-    * probe key `fp` ([[Versions.compact]] — a small batch's fingerprint
-    * set pushed into the standing scan then skips most row groups). */
+  /** Fold deltas `v0..v<upTo>` into a new base ([[DeltaStore.compact]]). */
   def compactStore(spark: SparkSession, root: String, upTo: Long): Unit =
-    Versions.compact(spark, root, upTo, tombstoneIdCol = Some("media_id"),
-      clusterBy = Seq("fp"))
+    store(root).compact(spark, upTo)
 }

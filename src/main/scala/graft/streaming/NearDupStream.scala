@@ -21,12 +21,20 @@ import graft.operators.Dedup
   *     text only for docs that actually share a bucket with the batch,
   *     so this store is scanned, never shuffled wholesale.
   *
-  * Exactly-once contract is [[PassageStream]]'s, applied to both roots: a
-  * redelivered batch rebases on deltas `<= batchId` and overwrites its
-  * own outputs deterministically; a fresh checkpoint over existing
-  * multi-delta roots is forked lineage and throws.
+  * Both are [[DeltaStore]]s. Band rows (id, band, bucket) are unique
+  * across deltas — each doc lands in exactly one batch — so the band fold
+  * `distinct` is read-equivalent while also collapsing any rows a
+  * crashed, re-run batch left behind, and the band base CLUSTERS by its
+  * probe key (band, bucket) so a small batch's pushed bucket predicate
+  * can skip standing row groups; the docs store folds by plain union (ids
+  * are unique per batch and the verify semi-join re-reads by id).
   */
 object NearDupStream {
+
+  private def bandStore(indexRoot: String) = DeltaStore(indexRoot,
+    "band index", _.distinct(), Some("id"), Seq("band", "bucket"))
+  private def docStore(docsRoot: String, idCol: String) =
+    DeltaStore(docsRoot, "docs store", idCol = Some(idCol))
 
   /** The `foreachBatch` callback: emit batch `batchId`'s near-dup pairs
     * (in-batch + against everything earlier) to `outRoot/b<batchId>`,
@@ -66,40 +74,15 @@ object NearDupStream {
       materializePairs: Boolean = false,
       pushBucketLimit: Int = 1024)(
       batch: DataFrame, batchId: Long): DataFrame = {
-    def deltasOf(root: String, what: String, tombstoneIdCol: String,
-        compactTransform: DataFrame => DataFrame,
-        clusterBy: Seq[String]): Seq[String] = {
-      val versions = Versions.guardAppend(spark, root, what, batchId)
-      val current = autoCompactVersions match {
-        case Some(k) =>
-          Versions.autoCompact(spark, root, batchId, k, compactTransform,
-            Some(tombstoneIdCol), clusterBy)
-        case None => versions
-      }
-      current.filter(_._1 <= batchId).map(_._2.toString)
-    }
-    // same per-store transforms as compactStores (band rows distinct,
-    // docs plain union); both reads mask tombstoned ids
-    // (Versions.maskTombstones — no-op plan when no takedown happened)
-    val idx = Versions.maskTombstones(spark, indexRoot,
-      Versions.read(spark, indexRoot,
-        deltasOf(indexRoot, "band index", "id", _.distinct(),
-          Seq("band", "bucket"))), "id", batchId)
-    val existingDocs = Versions.maskTombstones(spark, docsRoot,
-      Versions.read(spark, docsRoot,
-        deltasOf(docsRoot, "docs store", idCol, identity, Nil)),
-      idCol, batchId)
+    val (bs, ds) = (bandStore(indexRoot), docStore(docsRoot, idCol))
+    bs.beginBatch(spark, batchId, autoCompactVersions)
+    ds.beginBatch(spark, batchId, autoCompactVersions)
+    val idx = bs.read(spark, batchId)
+    val existingDocs = ds.read(spark, batchId)
     val bBands = Dedup.minhashBandIndex(batch, idCol, textCol, numHashes,
       bands, shingleSize, seed).localCheckpoint(true)
-    val restricted =
-      if (pushBucketLimit <= 0) idx
-      else {
-        val bks = bBands.select(col("bucket")).distinct()
-          .limit(pushBucketLimit + 1).collect().map(_.getLong(0)).toSeq
-        if (bks.size <= pushBucketLimit)
-          idx.filter(col("bucket").isin(bks: _*))
-        else idx
-      }
+    val restricted = DeltaStore.pushKeys(idx, "bucket",
+      bBands.select(col("bucket")), pushBucketLimit)
     val probe = Dedup.minhashPairsIncremental(batch, idCol, textCol,
         restricted, existingDocs, numHashes, bands, shingleSize, threshold,
         maxBucketSize, seed, newBandedOpt = Some(bBands))
@@ -110,15 +93,14 @@ object NearDupStream {
     // — overlap them so the trigger pays max, not sum (guide §2.6)
     graft.core.Par.run(
       () => pairs.write.mode("overwrite").parquet(s"$outRoot/b$batchId"),
-      () => bBands.write.mode("overwrite")
-        .parquet(s"$indexRoot/v${batchId + 1}"),
+      () => bBands.write.mode("overwrite").parquet(bs.deltaPath(batchId)),
       () => batch.select(col(idCol), col(textCol))
-        .write.mode("overwrite").parquet(s"$docsRoot/v${batchId + 1}"))
+        .write.mode("overwrite").parquet(ds.deltaPath(batchId)))
     pairs
   }
 
-  /** Retract doc ids from BOTH stores ([[Versions.tombstone]] contract,
-    * one marker per root so each root stays self-describing): probes
+  /** Retract doc ids from BOTH stores (one marker per root so each root
+    * stays self-describing): probes
     * from marker batch `batchId` on stop pairing against the retracted
     * docs' bands, and the exact-Jaccard verify stops reading their text;
     * [[compactStores]] drops the rows physically. */
@@ -129,23 +111,13 @@ object NearDupStream {
       () => Versions.tombstone(spark, indexRoot, ids, batchId),
       () => Versions.tombstone(spark, docsRoot, ids, batchId))
 
-  /** Merge both delta stores' `v0..v<upTo>` into new base snapshots (see
-    * [[Versions.compact]] for the lineage-guard and safety contract),
-    * physically dropping tombstoned docs (markers consumed) and
-    * CLUSTERING the band base by its probe key (band, bucket) so a small
-    * batch's pushed band predicate can skip standing row groups.
-    * Band rows (id, band, bucket) are unique across deltas — each doc
-    * lands in exactly one batch — so `distinct` is read-equivalent while
-    * also collapsing any rows a crashed, re-run batch left behind; the
-    * docs store compacts by plain union (ids are unique per batch and the
-    * verify semi-join re-reads by id). */
+  /** Merge both delta stores' `v0..v<upTo>` into new base snapshots
+    * ([[DeltaStore.compact]]), physically dropping tombstoned docs. */
   def compactStores(spark: SparkSession, indexRoot: String, docsRoot: String,
       upTo: Long, docIdCol: String = "doc_id"): Unit =
     // independent per-root rewrites (crash recovery is already "re-run
     // converges per root") — overlap them (guide §2.6)
     graft.core.Par.run(
-      () => Versions.compact(spark, indexRoot, upTo, _.distinct(),
-        tombstoneIdCol = Some("id"), clusterBy = Seq("band", "bucket")),
-      () => Versions.compact(spark, docsRoot, upTo,
-        tombstoneIdCol = Some(docIdCol)))
+      () => bandStore(indexRoot).compact(spark, upTo),
+      () => docStore(docsRoot, docIdCol).compact(spark, upTo))
 }

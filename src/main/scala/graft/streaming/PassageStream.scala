@@ -32,26 +32,30 @@ import graft.operators.Dedup
   * fresh-checkpoint guard is identical: batch ids restarting at 0 over an
   * existing multi-delta index means forked lineage, and the merge throws
   * rather than silently rebasing.
+  *
+  * The index is a MONOTONE [[DeltaStore]]: fps are ID-FREE (distinct
+  * window fps, no doc provenance) and SHARED across docs, so dropping one
+  * doc's fps would also forget every other doc holding the same passage —
+  * retraction is the rebuild lifecycle. The store is probed by semi-join
+  * only, so cross-delta duplicate fps collapse via a `distinct` fold.
   */
 object PassageStream {
 
-  /** Takedown refusal — the fingerprint index is ID-FREE (distinct window
-    * fps, no doc provenance) and fps are SHARED across docs: dropping one
-    * doc's fps would also forget every other doc holding the same
-    * passage, and keeping them can't be told apart from the doc never
-    * having existed. Retraction is therefore the rebuild lifecycle:
-    * re-derive [[graft.operators.Dedup.passageWindowIndex]] over the
-    * corpus minus the deleted docs into a NEW root and point a fresh
-    * stream at it ([[graft.streaming.Versions.tombstone]]'s
-    * monotone-store contract). */
+  private def store(indexRoot: String) = DeltaStore(indexRoot, "index",
+    _.distinct(),
+    standingHint = "write Dedup.passageWindowIndex(corpus) there before " +
+      "starting the stream",
+    rebuildHint = "the passage-fp index stores id-free fingerprints " +
+      "shared across docs — one doc's windows cannot be retracted. " +
+      "Rebuild Dedup.passageWindowIndex over the retained corpus into a " +
+      "NEW root and swap readers")
+
+  /** Takedown refusal — retraction re-derives
+    * [[graft.operators.Dedup.passageWindowIndex]] over the corpus minus
+    * the deleted docs into a NEW root and points a fresh stream at it. */
   def tombstone(spark: SparkSession, indexRoot: String, ids: Seq[Long],
       batchId: Long): Unit =
-    throw new UnsupportedOperationException(
-      s"tombstone($indexRoot, ${ids.size} ids, batch $batchId) refused: " +
-        "the passage-fp index stores id-free fingerprints shared across " +
-        "docs — one doc's windows cannot be retracted. Rebuild " +
-        "Dedup.passageWindowIndex over the retained corpus into a NEW " +
-        "root and swap readers")
+    store(indexRoot).tombstone(spark, ids, batchId)
 
   /** The `foreachBatch` callback: score one micro-batch against the
     * index-as-of-this-batch, write its stats to `outRoot/b<batchId>`, and
@@ -67,16 +71,9 @@ object PassageStream {
       idCol: String, textCol: String, windowTokens: Int = 8,
       autoCompactVersions: Option[Int] = None)(
       batch: DataFrame, batchId: Long): Unit = {
-    val versions = Versions.guardAppend(spark, indexRoot, "index", batchId,
-      "write Dedup.passageWindowIndex(corpus) there before starting the " +
-        "stream")
-    val current = autoCompactVersions match {
-      case Some(k) =>
-        Versions.autoCompact(spark, indexRoot, batchId, k, _.distinct())
-      case None => versions
-    }
-    val deltas = current.filter(_._1 <= batchId).map(_._2.toString)
-    val idx = Versions.read(spark, indexRoot, deltas)
+    val s = store(indexRoot)
+    val idx = Versions.read(spark, indexRoot,
+      s.beginBatch(spark, batchId, autoCompactVersions))
     // independent per-trigger writes (distinct batch-id-named paths, any
     // completion subset redelivery-recoverable) — overlap them (guide §2.6)
     graft.core.Par.run(
@@ -85,15 +82,11 @@ object PassageStream {
         .withColumn("batch", SteadyLit.steadyLong(batchId))
         .write.mode("overwrite").parquet(s"$outRoot/b$batchId"),
       () => Dedup.passageWindowIndex(batch, idCol, textCol, windowTokens)
-        .write.mode("overwrite").parquet(s"$indexRoot/v${batchId + 1}"))
+        .write.mode("overwrite").parquet(s.deltaPath(batchId)))
   }
 
-  /** Merge index deltas `v0..v<upTo>` into a new base snapshot (see
-    * [[Versions.compact]] for the lineage-guard and safety contract —
-    * `upTo` at most the checkpoint's last committed batch + 1). The
-    * fingerprint store is probed by semi-join only, so cross-delta
-    * duplicate fps collapse via `distinct` — the compacted base is
-    * strictly smaller and read-equivalent. */
+  /** Merge index deltas `v0..v<upTo>` into a new base snapshot
+    * ([[DeltaStore.compact]]) — strictly smaller and read-equivalent. */
   def compactIndex(spark: SparkSession, indexRoot: String, upTo: Long): Unit =
-    Versions.compact(spark, indexRoot, upTo, _.distinct())
+    store(indexRoot).compact(spark, upTo)
 }

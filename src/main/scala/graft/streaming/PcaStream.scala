@@ -41,38 +41,31 @@ object PcaStream {
         sum(col("cnt")).as("cnt"))
       .select(momentCols.map(col): _*)
 
-  /** Write the standing corpus's moments as `root/v0` (live-root-guarded:
-    * [[Versions.guardStandingWrite]]). */
-  def writeStanding(spark: SparkSession, root: String, standing: DataFrame,
-      vecCol: String = "embedding"): Unit = {
-    Versions.guardStandingWrite(spark, root)
-    Decomp.moments(standing, vecCol)
-      .write.mode("overwrite").parquet(s"$root/v0")
-  }
+  private def store(root: String) =
+    DeltaStore(root, "moments store", foldMoments)
 
-  /** The `foreachBatch` callback: batch moments → `root/v{batchId+1}`,
-    * under the family's standing-store + lineage-fork guards. An empty
-    * batch writes an empty delta (the fold ignores it). */
+  /** Write the standing corpus's moments as `root/v0`. */
+  def writeStanding(spark: SparkSession, root: String, standing: DataFrame,
+      vecCol: String = "embedding"): Unit =
+    store(root).writeStanding(spark, Decomp.moments(standing, vecCol))
+
+  /** The `foreachBatch` callback: batch moments → `root/v{batchId+1}`. An
+    * empty batch writes an empty delta (the fold ignores it). */
   def advanceBatch(spark: SparkSession, root: String,
       vecCol: String = "embedding",
       autoCompactVersions: Option[Int] = None)(
       batch: DataFrame, batchId: Long): Unit = {
-    Versions.guardAppend(spark, root, "moments store", batchId,
-      "writeStanding before starting the stream")
-    autoCompactVersions.foreach(k =>
-      Versions.autoCompact(spark, root, batchId, k, foldMoments))
+    val s = store(root)
+    s.beginBatch(spark, batchId, autoCompactVersions)
     Decomp.moments(batch, vecCol)
-      .write.mode("overwrite").parquet(s"$root/v${batchId + 1}")
+      .write.mode("overwrite").parquet(s.deltaPath(batchId))
   }
 
   /** The folded moments relation over every delta `<= upTo` — model-sized
     * (d(d+3)/2 rows), exact by decimal associativity. */
   def readMoments(spark: SparkSession, root: String,
-      upTo: Long = Long.MaxValue): DataFrame = {
-    val versions = Versions.list(spark, root).filter(_._1 <= upTo)
-    require(versions.nonEmpty, s"no moment versions at $root")
-    foldMoments(Versions.read(spark, root, versions.map(_._2.toString)))
-  }
+      upTo: Long = Long.MaxValue): DataFrame =
+    foldMoments(store(root).read(spark, upTo))
 
   /** The current model: fold deltas, solve on the driver — bit-identical
     * to `Decomp.pcaFit` over the corresponding corpus union. */
@@ -83,9 +76,8 @@ object PcaStream {
         (r.getInt(0), r.getInt(1), r.getDecimal(2), r.getLong(3))),
       k, iters)
 
-  /** Fold moment deltas `v0..v<upTo>` into a new base (see
-    * [[Versions.compact]]); the decimal fold is read-equivalent by
-    * associativity. */
+  /** Fold moment deltas `v0..v<upTo>` into a new base; the decimal fold
+    * is read-equivalent by associativity. */
   def compactStore(spark: SparkSession, root: String, upTo: Long): Unit =
-    Versions.compact(spark, root, upTo, foldMoments)
+    store(root).compact(spark, upTo)
 }

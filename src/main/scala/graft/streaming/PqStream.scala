@@ -70,51 +70,24 @@ object PqStream {
     banks
   }
 
-  /** Order-independent content fingerprint of a codebook relation —
-    * (bit_xor of `fingerprint64` over each row's canonical
-    * `j:code:v0,v1,...` rendering, row count): the [[IvfStream
-    * .bankFingerprint]] (fp, n) convention for the m-subspace model. */
-  def bookFingerprint(book: DataFrame): (Long, Long) = {
-    val row = book
-      .select(graft.functions.HashFunctions.fingerprint64(concat_ws(":",
-          col("j").cast("string"), col("code").cast("string"),
-          concat_ws(",", transform(col("cv").cast("array<double>"),
-            e => e.cast("string"))))).as("__fp"))
-      .agg(expr("bit_xor(__fp)").as("fp"), count(lit(1)).as("n"))
-      .head()
-    require(row.getLong(1) > 0, "cannot fingerprint an empty codebook")
-    (row.getLong(0), row.getLong(1))
-  }
+  /** The codes store: identity fold (rows unique across deltas — each
+    * vector arrives in exactly one batch), tombstones on `neighbor_id`. */
+  private def codes(codesRoot: String) =
+    DeltaStore(codesRoot, "codes store", idCol = Some("neighbor_id"))
 
-  private def writeBookPin(spark: SparkSession, codesRoot: String,
-      fp: (Long, Long)): Unit = {
-    import spark.implicits._
-    Seq(("book_fp", fp._1), ("book_n", fp._2)).toDF("k", "v")
-      .coalesce(1).write.mode("overwrite").parquet(s"$codesRoot/_params")
-  }
+  /** Order-independent content fingerprint of a codebook relation
+    * (j, code, cv) — the [[IvfStream.bankFingerprint]] (fp, n) convention
+    * for the m-subspace model. */
+  def bookFingerprint(book: DataFrame): (Long, Long) =
+    DeltaStore.fingerprint(book, "codebook", "j", "code")
 
   /** Fail loud unless the codebook at `bookRoot/v0` hashes to the
     * fingerprint pinned when `codesRoot` was built. */
   def checkBook(spark: SparkSession, bookRoot: String,
-      codesRoot: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$codesRoot/_params")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(p),
-      s"$codesRoot/_params missing — writeStanding (which pins the " +
-        "fingerprint of the codebook the codes were encoded under) " +
-        "before appending or probing")
-    val pinRows = Versions.read(spark, s"$codesRoot/_params",
-      Seq(s"$codesRoot/_params"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val pinned = (pinRows("book_fp"), pinRows("book_n"))
-    val actual = bookFingerprint(Versions.read(spark, bookRoot,
-      Seq(s"$bookRoot/v0")))
-    require(actual == pinned,
-      s"codebook at $bookRoot does not match the codebook $codesRoot " +
-        s"was encoded under (fingerprint/count $actual vs pinned $pinned)" +
-        " — codes under one codebook decoded under another reconstruct " +
-        "garbage; use the original book root or rebuild into new roots")
-  }
+      codesRoot: String): Unit =
+    codes(codesRoot).checkModel(spark, "book", bookRoot, "codebook",
+      "codes under one codebook decoded under another reconstruct garbage",
+      "j", "code")
 
   /** Write the standing stores: the codebooks as `bookRoot/v0`, the
     * standing corpus's codes as `codesRoot/v0`, and the frozen book's
@@ -123,13 +96,15 @@ object PqStream {
       codesRoot: String, standing: DataFrame,
       banks: Array[Array[Array[Double]]],
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    Versions.guardStandingWrite(spark, bookRoot)
-    Versions.guardStandingWrite(spark, codesRoot)
+    val cs = codes(codesRoot)
+    DeltaStore(bookRoot, "codebook").guardStanding(spark)
+    cs.guardStanding(spark)
     bookRelation(spark, banks)
       .write.mode("overwrite").parquet(s"$bookRoot/v0")
     val frozen = banksOf(spark, bookRoot)
-    writeBookPin(spark, codesRoot,
-      bookFingerprint(Versions.read(spark, bookRoot, Seq(s"$bookRoot/v0"))))
+    cs.pinModel(spark, "book",
+      Versions.read(spark, bookRoot, Seq(s"$bookRoot/v0")), "codebook",
+      "j", "code")
     Similarity.pqEncode(standing, frozen, idCol, vecCol)
       .write.mode("overwrite").parquet(s"$codesRoot/v0")
   }
@@ -147,15 +122,10 @@ object PqStream {
       outRoot: String, idCol: String, vecCol: String,
       autoCompactVersions: Option[Int] = None)(
       batch: DataFrame, batchId: Long): Unit = {
-    val bookVersions = Versions.list(spark, bookRoot)
-    require(bookVersions.map(_._1) == Seq(0L),
-      s"codebook at $bookRoot must be exactly v0 (found " +
-        s"${bookVersions.map("v" + _._1).mkString(", ")}) — a codes store " +
-        "is bound to the codebook it was encoded under; retrain into a " +
-        "NEW root and rebuild, never mutate a live codebook")
-    Versions.guardAppend(spark, codesRoot, "codes store", batchId,
-      "writeStanding before starting the stream")
-    // r18: the guard chain (checkBook's two model-sized actions, then
+    val cs = codes(codesRoot)
+    Versions.requireFrozen(spark, bookRoot, "codebook")
+    cs.beginBatch(spark, batchId)
+    // r18: the guard chain (checkBook's model-sized actions, then
     // compaction) and the batch's encode STAGING are independent —
     // overlap them (guide §2.6, the IvfStream.appendBatch shape). A
     // failing guard still fails before any store write (the staging is
@@ -163,11 +133,7 @@ object PqStream {
     val staged = graft.core.Par.eval(Seq[() => AnyRef](
       () => {
         checkBook(spark, bookRoot, codesRoot)
-        // same fold parameters as compactStore: tombstoned codes drop
-        // physically and the markers are consumed
-        autoCompactVersions.foreach(k =>
-          Versions.autoCompact(spark, codesRoot, batchId, k,
-            tombstoneIdCol = Some("neighbor_id")))
+        cs.autoCompact(spark, batchId, autoCompactVersions)
         null
       },
       () => {
@@ -177,7 +143,7 @@ object PqStream {
       }))
     val (banks, enc) = staged(1)
       .asInstanceOf[(Array[Array[Array[Double]]], DataFrame)]
-    enc.write.mode("overwrite").parquet(s"$codesRoot/v${batchId + 1}")
+    enc.write.mode("overwrite").parquet(cs.deltaPath(batchId))
     // the drift profile: reconstruction error of THIS batch under the
     // frozen books — sequential-fold doubles staged through DECIMAL so
     // the sum is partitioning-independent and oracle-replayable
@@ -193,25 +159,17 @@ object PqStream {
       .write.mode("overwrite").parquet(s"$outRoot/b$batchId")
   }
 
-  /** The assembled codes relation: every delta `<= upTo`, a plain scan
-    * union (rows unique across deltas — each vector arrives in exactly
-    * one batch). */
+  /** The assembled codes relation ([[DeltaStore.read]]). */
   def readCodes(spark: SparkSession, codesRoot: String,
-      upTo: Long = Long.MaxValue): DataFrame = {
-    val versions = Versions.list(spark, codesRoot).filter(_._1 <= upTo)
-    require(versions.nonEmpty, s"no codes versions at $codesRoot")
-    Versions.maskTombstones(spark, codesRoot,
-      Versions.read(spark, codesRoot, versions.map(_._2.toString)),
-      "neighbor_id", upTo)
-  }
+      upTo: Long = Long.MaxValue): DataFrame =
+    codes(codesRoot).read(spark, upTo)
 
-  /** Retract vector ids from the codes store ([[Versions.tombstone]]
-    * contract): reads stop returning the retracted codes; compaction
-    * drops their rows physically. The codebooks are a trained MODEL —
-    * never retracted, only rebuilt ([[rebuild]]). */
+  /** Retract vector ids from the codes store: reads stop returning the
+    * retracted codes. The codebooks are a trained MODEL — never
+    * retracted, only rebuilt ([[rebuild]]). */
   def tombstone(spark: SparkSession, codesRoot: String, ids: Seq[Long],
       batchId: Long): Unit =
-    Versions.tombstone(spark, codesRoot, ids, batchId)
+    codes(codesRoot).tombstone(spark, ids, batchId)
 
   /** The rebuild half of the reader-swap lifecycle the drift profiles
     * signal: retrain codebooks over the CURRENT source corpus (the codes
@@ -224,21 +182,15 @@ object PqStream {
   def rebuild(spark: SparkSession, corpus: DataFrame, newBookRoot: String,
       newCodesRoot: String, m: Int, nCodes: Int, iters: Int = 2,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    require(Versions.list(spark, newBookRoot).isEmpty,
-      s"rebuild target $newBookRoot already holds versions — rebuild " +
-        "writes a NEW root and readers swap; never rebuild into a live root")
-    require(Versions.list(spark, newCodesRoot).isEmpty,
-      s"rebuild target $newCodesRoot already holds versions — rebuild " +
-        "writes a NEW root and readers swap; never rebuild into a live root")
+    Versions.requireFresh(spark, newBookRoot)
+    Versions.requireFresh(spark, newCodesRoot)
     val banks = Similarity.pqTrain(corpus, m, nCodes, iters, idCol, vecCol)
     writeStanding(spark, newBookRoot, newCodesRoot, corpus, banks,
       idCol, vecCol)
   }
 
-  /** Fold codes deltas `v0..v<upTo>` into a new base (rows unique across
-    * deltas ⇒ the identity fold is read-equivalent); tombstoned vectors
-    * drop physically (markers consumed). */
+  /** Fold codes deltas `v0..v<upTo>` into a new base
+    * ([[DeltaStore.compact]]). */
   def compactStore(spark: SparkSession, codesRoot: String, upTo: Long): Unit =
-    Versions.compact(spark, codesRoot, upTo,
-      tombstoneIdCol = Some("neighbor_id"))
+    codes(codesRoot).compact(spark, upTo)
 }

@@ -40,13 +40,38 @@ import graft.operators.Retrieval
   * offline when probe traffic dominates ingest. */
 object RetrievalStream {
 
-  private def postRoot(root: String) = s"$root/post"
-  private def statsRoot(root: String) = s"$root/stats"
-  private def dlenRoot(root: String) = s"$root/dlen"
+  private def foldStats(df: DataFrame): DataFrame =
+    df.agg(sum(col("n_docs")).cast("long").as("n_docs"),
+      sum(col("total_dl")).cast("long").as("total_dl"))
+
+  /** The three [[DeltaStore]]s: postings fold by identity (rows disjoint),
+    * drop tombstoned docs and CLUSTER by the probe key `term` (the probe's
+    * query-vocabulary filter pushes into the parquet scan, so a sorted
+    * base prunes standing row groups per probe); stats fold by the exact
+    * integer sum (takedowns retract through in-band corrections, not
+    * markers); doclens fold by identity. */
+  private def post(root: String) = DeltaStore(s"$root/post", "posting",
+    idCol = Some("doc_id"), clusterBy = Seq("term"))
+  private def stats(root: String) = DeltaStore(s"$root/stats", "stats",
+    foldStats)
+  private def doclens(root: String) = DeltaStore(s"$root/dlen", "doclen")
+  private def postRoot(root: String) = post(root).root
+  private def statsRoot(root: String) = stats(root).root
+  private def dlenRoot(root: String) = doclens(root).root
+
+  /** Every doclen row — the exact (1, dl) a takedown or revive corrects
+    * the stats by; refused by a store predating the takedown-capable
+    * layout. */
+  private def readDoclens(spark: SparkSession, root: String,
+      verb: String): DataFrame = {
+    require(Versions.list(spark, dlenRoot(root)).nonEmpty,
+      s"$verb refused: ${dlenRoot(root)} is empty — the store predates " +
+        "the takedown-capable layout; rebuild via writeStanding")
+    doclens(root).read(spark)
+  }
 
   /** Write the standing corpus's postings + stats + per-doc lengths as
-    * the three `v0`s (all roots live-root-guarded:
-    * [[Versions.guardStandingWrite]]). The doclen relation
+    * the three `v0`s (all roots live-root-guarded). The doclen relation
     * ([[Retrieval.doclenRelation]] — 16 bytes/doc) exists for the
     * takedown path: it is what lets [[readStats]] retract a tombstoned
     * doc's (1, dl) stats contribution EXACTLY, including zero-token docs
@@ -54,9 +79,8 @@ object RetrievalStream {
   def writeStanding(spark: SparkSession, root: String, standing: DataFrame,
       idCol: String = "doc_id", textCol: String = "text",
       lease: Option[Versions.Lease] = None): Unit = {
-    Versions.guardStandingWrite(spark, postRoot(root), lease)
-    Versions.guardStandingWrite(spark, statsRoot(root), lease)
-    Versions.guardStandingWrite(spark, dlenRoot(root), lease)
+    Seq(post(root), stats(root), doclens(root))
+      .foreach(_.guardStanding(spark, lease))
     // independent standing writes (a torn subset fails loud at
     // appendBatch's both-roots guard, whichever write crashed) — overlap
     // them (guide §2.6)
@@ -79,8 +103,7 @@ object RetrievalStream {
       autoCompactVersions: Option[Int] = None,
       lease: Option[Versions.Lease] = None)(
       batch: DataFrame, batchId: Long): Unit = {
-    Versions.guardAppend(spark, postRoot(root), "postings", batchId,
-      "writeStanding before starting the stream", lease)
+    post(root).beginBatch(spark, batchId, lease = lease)
     // BOTH standing roots, like every other two-root store: a
     // writeStanding that crashed between the postings and stats writes
     // would otherwise stream over stats that exclude the standing corpus
@@ -117,19 +140,12 @@ object RetrievalStream {
     // side landed) — overlap them (guide §2.6)
     graft.core.Par.run(
       () => Retrieval.postingsRelation(b, idCol, textCol)
-        .write.mode("overwrite")
-        .parquet(s"${postRoot(root)}/v${batchId + 1}"),
+        .write.mode("overwrite").parquet(post(root).deltaPath(batchId)),
       () => Retrieval.statsRelation(b, idCol, textCol)
-        .write.mode("overwrite")
-        .parquet(s"${statsRoot(root)}/v${batchId + 1}"),
+        .write.mode("overwrite").parquet(stats(root).deltaPath(batchId)),
       () => Retrieval.doclenRelation(b, idCol, textCol)
-        .write.mode("overwrite")
-        .parquet(s"${dlenRoot(root)}/v${batchId + 1}"))
+        .write.mode("overwrite").parquet(doclens(root).deltaPath(batchId)))
   }
-
-  private def foldStats(df: DataFrame): DataFrame =
-    df.agg(sum(col("n_docs")).cast("long").as("n_docs"),
-      sum(col("total_dl")).cast("long").as("total_dl"))
 
   /** Retract doc ids from the index. Two batch-id-named writes, both
     * deterministic under redelivery:
@@ -170,20 +186,10 @@ object RetrievalStream {
   def tombstoneFrom(spark: SparkSession, root: String, ids: DataFrame,
       batchId: Long, lease: Option[Versions.Lease] = None): Unit = {
     Versions.checkWriter(spark, postRoot(root), lease)
-    require(ids.schema.fields.length == 1,
-      s"tombstoneFrom takes a single id column, got ${ids.schema.fieldNames
-        .mkString(", ")}")
-    require(Versions.list(spark, postRoot(root)).exists(_._1 == 0L),
-      s"tombstone refused: ${postRoot(root)}/v0 missing — the store must " +
-        "exist before ids can be retracted from it")
-    val rel = ids.toDF("id").select(col("id").cast("long").as("id"))
-      .filter(col("id").isNotNull)
-      .distinct().localCheckpoint(true)
+    val sweep = Versions.idRelation(ids, "tombstoneFrom")
+    Versions.requireRetractable(spark, postRoot(root))
+    val rel = sweep.localCheckpoint(true)
     require(rel.limit(1).count() > 0, "tombstone of an empty id set")
-    val dlen = Versions.list(spark, dlenRoot(root))
-    require(dlen.nonEmpty,
-      s"takedown refused: ${dlenRoot(root)} is empty — the store predates " +
-        "the takedown-capable layout; rebuild via writeStanding")
     // the correction subtracts only ids ALIVE as of the markers strictly
     // before this batch (ADVICE r16 #1): two overlapping sweeps are
     // in-contract input (a GDPR pass re-listing a quality pass's ids),
@@ -194,7 +200,7 @@ object RetrievalStream {
     // correction (redelivery-stable, the readAssignmentsMasked precedent)
     val alive = Versions.deadSet(spark, postRoot(root), upTo = batchId - 1)
       .fold(rel)(dead => rel.join(broadcast(dead), Seq("id"), "left_anti"))
-    Versions.read(spark, dlenRoot(root), dlen.map(_._2.toString))
+    readDoclens(spark, root, "takedown")
       .join(broadcast(alive.select(col("id").as("doc_id"))), "doc_id")
       .agg((-count(lit(1))).cast("long").as("n_docs"),
         (-coalesce(sum(col("dl")), lit(0L))).cast("long").as("total_dl"))
@@ -230,30 +236,13 @@ object RetrievalStream {
   def revive(spark: SparkSession, root: String, ids: DataFrame,
       batchId: Long, lease: Option[Versions.Lease] = None): Unit = {
     Versions.checkWriter(spark, postRoot(root), lease)
-    require(ids.schema.fields.length == 1,
-      s"revive takes a single id column, got ${ids.schema.fieldNames
-        .mkString(", ")}")
-    val rel = ids.toDF("id").select(col("id").cast("long").as("id"))
-      .filter(col("id").isNotNull)
-      .distinct().localCheckpoint(true)
+    val rel = Versions.idRelation(ids, "revive").localCheckpoint(true)
     require(rel.limit(1).count() > 0, "revive of an empty id set")
     // the dead-as-of-(batchId-1) check runs HERE, before the correction
     // write (Versions.revive re-checks before its marker write): a
     // refused revive must not leave an orphan correction behind
-    val dead = Versions.deadSet(spark, postRoot(root), upTo = batchId - 1)
-    require(dead.isDefined,
-      s"revive refused: no tombstones at ${postRoot(root)} — nothing to " +
-        "revive")
-    val notDead = rel.join(dead.get, Seq("id"), "left_anti")
-      .limit(5).collect().map(_.getLong(0))
-    require(notDead.isEmpty,
-      s"revive refused: ids ${notDead.mkString(", ")} are not taken down " +
-        s"at ${postRoot(root)} as of batch ${batchId - 1}")
-    val dlen = Versions.list(spark, dlenRoot(root))
-    require(dlen.nonEmpty,
-      s"revive refused: ${dlenRoot(root)} is empty — the store predates " +
-        "the takedown-capable layout")
-    Versions.read(spark, dlenRoot(root), dlen.map(_._2.toString))
+    Versions.requireDeadBefore(spark, postRoot(root), rel, batchId)
+    readDoclens(spark, root, "revive")
       .join(broadcast(rel.select(col("id").as("doc_id"))), "doc_id")
       .agg(count(lit(1)).cast("long").as("n_docs"),
         coalesce(sum(col("dl")), lit(0L)).cast("long").as("total_dl"))
@@ -267,17 +256,12 @@ object RetrievalStream {
     * ([[Versions.maskTombstones]] — broadcast anti-join; plan untouched
     * when no takedown ever happened). */
   def readPostings(spark: SparkSession, root: String,
-      upTo: Long = Long.MaxValue): DataFrame = {
-    val versions = Versions.list(spark, postRoot(root)).filter(_._1 <= upTo)
-    require(versions.nonEmpty, s"no posting versions at ${postRoot(root)}")
+      upTo: Long = Long.MaxValue): DataFrame =
     // revive markers are legal here since the store grew its own paired
     // revive verb ([[revive]] — positive stats correction + r marker);
     // [[readStats]]' orphan check still fails loud on an r marker with
     // no correction (a generic Versions.revive bypassing the verb)
-    Versions.maskTombstones(spark, postRoot(root),
-      Versions.read(spark, postRoot(root), versions.map(_._2.toString)),
-      "doc_id", upTo)
-  }
+    post(root).read(spark, upTo)
 
   /** The assembled 1-row stats: exact integer fold of the version deltas
     * AND the in-band takedown corrections (`c*` rows, [[tombstoneFrom]] —
@@ -341,15 +325,11 @@ object RetrievalStream {
     Retrieval.bm25TopKOver(readPostings(spark, root, upTo),
       readStats(spark, root, upTo), queryTerms, k, k1, b)
 
-  /** Fold all three stores' deltas `v0..v<upTo>` into new bases
-    * (postings by identity — rows disjoint; stats by the integer fold of
-    * versions AND in-band corrections; doclens by identity), making any
-    * takedown PHYSICAL: deleted docs' doclen and posting rows drop, the
-    * consumed markers and corrections are deleted — reads before and
-    * after are identical. The posting base CLUSTERS by its probe key
-    * `term` (the probe's query-vocabulary filter pushes into the parquet
-    * scan, so a sorted base prunes standing row groups per probe —
-    * VERDICT r13 #2).
+  /** Fold all three stores' deltas `v0..v<upTo>` into new bases (stats
+    * fold versions AND in-band corrections), making any takedown
+    * PHYSICAL: deleted docs' doclen and posting rows drop, the consumed
+    * markers and corrections are deleted — reads before and after are
+    * identical.
     *
     * Idempotent across partial completion (ADVICE r15 #1): each root's
     * rewrite is independently read-equivalent — the stats fold never
@@ -374,37 +354,20 @@ object RetrievalStream {
     // then refuse, and the already-revived doc would be left live with
     // no dlen row — a FUTURE takedown of it would subtract (0, 0) and
     // the stats would go silently wrong forever.
-    val pending = Versions.listRevives(spark, postRoot(root))
-      .filter(_._1 > upTo)
-    if (pending.nonEmpty)
-      Versions.deadSet(spark, postRoot(root), upTo).foreach { dead =>
-        val orphaned = Versions.read(spark, s"${postRoot(root)}#d",
-            pending.map(_._2.toString)).select(col("id"))
-          .join(dead, Seq("id"), "left_semi")
-          .limit(5).collect().map(_.getLong(0))
-        require(orphaned.isEmpty,
-          s"compactStore($root, upTo=$upTo) refused: ids " +
-            s"${orphaned.mkString(", ")} have a revive marker newer than " +
-            "the bound but their rows would be physically dropped here — " +
-            "raise upTo past the revive or withdraw it")
-      }
+    Versions.requireNoOrphanedRevive(spark, postRoot(root), upTo,
+      s"compactStore($root, upTo=$upTo)")
     // resolve the deleted ids BEFORE the posting compaction consumes the
     // markers (eager checkpoint — the relation must survive the delete).
     // NOTE deadSet resolution: ids dead as of upTo (tombstoned, not since
     // revived) — a revived id's rows must survive the physical fold
     val delIds = Versions.deadSet(spark, postRoot(root), upTo)
       .map(_.select(col("id").as("doc_id")).localCheckpoint(true))
-    Versions.compact(spark, dlenRoot(root), upTo,
-      df => delIds.fold(df)(ids =>
-        df.join(broadcast(ids), Seq("doc_id"), "left_anti")),
-      allowSingle = true, lease = lease)
-    Versions.compact(spark, postRoot(root), upTo,
-      tombstoneIdCol = Some("doc_id"), clusterBy = Seq("term"),
-      allowSingle = true, lease = lease)
-    Versions.compact(spark, statsRoot(root), upTo, foldStats,
-      allowSingle = true,
+    doclens(root).copy(fold = df => delIds.fold(df)(ids =>
+        df.join(broadcast(ids), Seq("doc_id"), "left_anti")))
+      .compact(spark, upTo, lease, allowSingle = true)
+    post(root).compact(spark, upTo, lease, allowSingle = true)
+    stats(root).compact(spark, upTo, lease, allowSingle = true,
       extraDirs = Versions.listPrefixed(spark, statsRoot(root), 'c')
-        .filter(_._1 <= upTo).map(_._2),
-      lease = lease)
+        .filter(_._1 <= upTo).map(_._2))
   }
 }

@@ -30,23 +30,29 @@ import graft.operators.Profiling
   * model-sized fold, not the corpus. */
 object SketchStream {
 
-  /** Takedown refusal — the sketch stores are MONOTONE: an HLL register
+  /** The three sketch stores are MONOTONE [[DeltaStore]]s: an HLL register
     * holds a max over every item that ever hashed into it, a count-min
-    * counter a sum, a bloom word an OR of set bits. None can un-absorb
-    * one item ([[graft.streaming.Versions.tombstone]]'s contract names
-    * this class), so the takedown verb for a sketch is its REBUILD
-    * lifecycle: re-derive the model from the corpus minus the deleted
-    * items into a new root and swap readers ([[rebuildBloomStore]] for
-    * bloom; HLL/count-min re-run [[writeStanding]]/[[writeStandingCm]]
+    * counter a sum, a bloom word an OR of set bits — none can un-absorb
+    * one item, so their takedown verb is the REBUILD lifecycle. */
+  private def store(root: String, noun: String,
+      fold: DataFrame => DataFrame) = DeltaStore(root, noun, fold,
+    rebuildHint = "sketch stores are monotone (HLL register max / " +
+      "count-min sums / bloom OR-ed bits cannot un-absorb an item). " +
+      "Rebuild from the retained corpus into a NEW root and swap readers " +
+      "— rebuildBloomStore for bloom; writeStanding/writeStandingCm for " +
+      "HLL/count-min")
+  private def hll(root: String, groupCols: Seq[String]) =
+    store(root, "register", foldRegisters(groupCols))
+  private def cm(root: String) = store(root, "counter", foldCounters)
+  private def bloom(root: String) = store(root, "bloom", foldBits)
+
+  /** Takedown refusal — re-derive the model from the corpus minus the
+    * deleted items into a new root and swap readers ([[rebuildBloomStore]]
+    * for bloom; HLL/count-min re-run [[writeStanding]]/[[writeStandingCm]]
     * over the retained corpus — the p115/p120/p121 reader-swap shape). */
   def tombstone(spark: SparkSession, root: String, ids: Seq[Long],
       batchId: Long): Unit =
-    throw new UnsupportedOperationException(
-      s"tombstone($root, ${ids.size} ids, batch $batchId) refused: sketch " +
-        "stores are monotone (HLL register max / count-min sums / bloom " +
-        "OR-ed bits cannot un-absorb an item). Rebuild from the retained " +
-        "corpus into a NEW root and swap readers — rebuildBloomStore for " +
-        "bloom; writeStanding/writeStandingCm for HLL/count-min")
+    bloom(root).tombstone(spark, ids, batchId)
 
   private def foldRegisters(groupCols: Seq[String])(df: DataFrame): DataFrame =
     df.groupBy((groupCols.map(col) :+ col("__idx")): _*)
@@ -58,72 +64,61 @@ object SketchStream {
   // (QuantileStream) and an IVF index to its bank (IvfStream): registers
   // written at p=10 read under the p=8 estimator — or w=2048 counters
   // probed with w=1024 bucket hashing — produce silently-garbage
-  // estimates. writeStanding pins the parameters at `root/_params`
-  // (ignored by Versions.list's v\d+ filter and by compaction); every
-  // parameter-taking read/append fails loud on a mismatch.
+  // estimates. Standing writes pin the parameters (DeltaStore.writePin);
+  // every parameter-taking read/append fails loud on a mismatch.
 
-  // Standing writes are live-root-guarded ([[Versions.guardStandingWrite]]
-  // — now the family-wide convention): a fresh v0 + _params over live
-  // deltas would silently mix sketch parameters on read.
-  private def guardStandingWrite(spark: SparkSession, root: String): Unit =
-    Versions.guardStandingWrite(spark, root)
-
-  private def writeParams(spark: SparkSession, root: String,
-      params: Map[String, Int]): Unit = {
-    import spark.implicits._
-    params.toSeq.sortBy(_._1).toDF("k", "v")
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/_params")
+  /** The standing write shared by the three sketches: live-root guard, the
+    * parameter pin, then `v0`. */
+  private def writeSketch(spark: SparkSession, s: DeltaStore,
+      params: Map[String, Int], standing: DataFrame): Unit = {
+    s.guardStanding(spark)
+    s.writePin(spark, params.toSeq.sortBy(_._1))
+    standing.write.mode("overwrite").parquet(s"${s.root}/v0")
   }
 
   private def checkParams(spark: SparkSession, root: String,
       params: Map[String, Int]): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/_params")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(p),
-      s"$root/_params missing — writeStanding (which pins the sketch " +
-        "parameters the store was built under) before reading or appending")
-    val stored = Versions.read(spark, s"$root/_params",
-      Seq(s"$root/_params"))
-      .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
-    require(stored == params,
+    val stored = DeltaStore(root, "sketch")
+      .readPin(spark, "sketch parameters the store was built under")
+    require(stored == params.map { case (k, v) => k -> v.toLong },
       s"sketch-parameter mismatch at $root: store built with $stored, " +
         s"caller passed $params — estimates under mismatched parameters " +
         "are silently garbage; use the stored parameters or build a new " +
         "store")
   }
 
-  /** Write the standing corpus's register relation as `root/v0`. */
-  def writeStanding(spark: SparkSession, root: String, standing: DataFrame,
-      groupCols: Seq[String], valueCol: String, p: Int = 8): Unit = {
-    guardStandingWrite(spark, root)
-    writeParams(spark, root, Map("p" -> p))
-    Profiling.hllRegisters(standing, groupCols, valueCol, p)
-      .write.mode("overwrite").parquet(s"$root/v0")
+  /** The `foreachBatch` prologue shared by the three sketches: the append
+    * guard, the parameter check, then auto-compaction — and the batch's
+    * delta path. */
+  private def beginBatch(spark: SparkSession, s: DeltaStore,
+      params: Map[String, Int], batchId: Long,
+      autoCompactVersions: Option[Int]): String = {
+    s.beginBatch(spark, batchId)
+    checkParams(spark, s.root, params)
+    s.autoCompact(spark, batchId, autoCompactVersions)
+    s.deltaPath(batchId)
   }
 
-  /** The `foreachBatch` callback: batch registers → `root/v{batchId+1}`,
-    * under the family's standing-store + lineage-fork guards. */
+  /** Write the standing corpus's register relation as `root/v0`. */
+  def writeStanding(spark: SparkSession, root: String, standing: DataFrame,
+      groupCols: Seq[String], valueCol: String, p: Int = 8): Unit =
+    writeSketch(spark, hll(root, groupCols), Map("p" -> p),
+      Profiling.hllRegisters(standing, groupCols, valueCol, p))
+
+  /** The `foreachBatch` callback: batch registers → `root/v{batchId+1}`. */
   def advanceBatch(spark: SparkSession, root: String,
       groupCols: Seq[String], valueCol: String, p: Int = 8,
       autoCompactVersions: Option[Int] = None)(
-      batch: DataFrame, batchId: Long): Unit = {
-    guardStore(spark, root, batchId)
-    checkParams(spark, root, Map("p" -> p))
-    autoCompactVersions.foreach(k =>
-      Versions.autoCompact(spark, root, batchId, k, foldRegisters(groupCols)))
+      batch: DataFrame, batchId: Long): Unit =
     Profiling.hllRegisters(batch, groupCols, valueCol, p)
-      .write.mode("overwrite").parquet(s"$root/v${batchId + 1}")
-  }
+      .write.mode("overwrite").parquet(beginBatch(spark,
+        hll(root, groupCols), Map("p" -> p), batchId, autoCompactVersions))
 
   /** The folded register relation over every delta `<= upTo` —
     * model-sized, exact by max-merge associativity. */
   def readRegisters(spark: SparkSession, root: String,
-      groupCols: Seq[String], upTo: Long = Long.MaxValue): DataFrame = {
-    val versions = Versions.list(spark, root).filter(_._1 <= upTo)
-    require(versions.nonEmpty, s"no register versions at $root")
-    foldRegisters(groupCols)(
-      Versions.read(spark, root, versions.map(_._2.toString)))
-  }
+      groupCols: Seq[String], upTo: Long = Long.MaxValue): DataFrame =
+    foldRegisters(groupCols)(hll(root, groupCols).read(spark, upTo))
 
   /** The live cardinality estimate — bit-identical to
     * [[Profiling.hllDistinct]] over the corresponding corpus union. */
@@ -134,12 +129,11 @@ object SketchStream {
       readRegisters(spark, root, groupCols, upTo), groupCols, p)
   }
 
-  /** Fold register deltas `v0..v<upTo>` into a new base (see
-    * [[Versions.compact]]); the max-merge is read-equivalent by
-    * associativity (and idempotent besides). */
+  /** Fold register deltas `v0..v<upTo>` into a new base; the max-merge is
+    * read-equivalent by associativity (and idempotent besides). */
   def compactStore(spark: SparkSession, root: String,
       groupCols: Seq[String], upTo: Long): Unit =
-    Versions.compact(spark, root, upTo, foldRegisters(groupCols))
+    hll(root, groupCols).compact(spark, upTo)
 
   // ---- count-min (frequency) ---------------------------------------------
   // The COUNTING sibling: per-batch counter deltas (d×w rows, model-sized)
@@ -154,42 +148,25 @@ object SketchStream {
     df.groupBy(col("j"), col("bucket"))
       .agg(sum(col("cnt")).cast("long").as("cnt"))
 
-  private def guardStore(spark: SparkSession, root: String,
-      batchId: Long): Unit = {
-    Versions.guardAppend(spark, root, "store", batchId,
-      "writeStanding before starting the stream")
-    ()
-  }
-
   /** Write the standing corpus's count-min counters as `root/v0`. */
   def writeStandingCm(spark: SparkSession, root: String, standing: DataFrame,
-      keyCol: String, d: Int = 4, w: Int = 1024): Unit = {
-    guardStandingWrite(spark, root)
-    writeParams(spark, root, Map("d" -> d, "w" -> w))
-    Profiling.countMinSketch(standing, keyCol, d, w)
-      .write.mode("overwrite").parquet(s"$root/v0")
-  }
+      keyCol: String, d: Int = 4, w: Int = 1024): Unit =
+    writeSketch(spark, cm(root), Map("d" -> d, "w" -> w),
+      Profiling.countMinSketch(standing, keyCol, d, w))
 
   /** The `foreachBatch` callback for the counter store. */
   def advanceBatchCm(spark: SparkSession, root: String, keyCol: String,
       d: Int = 4, w: Int = 1024, autoCompactVersions: Option[Int] = None)(
-      batch: DataFrame, batchId: Long): Unit = {
-    guardStore(spark, root, batchId)
-    checkParams(spark, root, Map("d" -> d, "w" -> w))
-    autoCompactVersions.foreach(k =>
-      Versions.autoCompact(spark, root, batchId, k, foldCounters))
+      batch: DataFrame, batchId: Long): Unit =
     Profiling.countMinSketch(batch, keyCol, d, w)
-      .write.mode("overwrite").parquet(s"$root/v${batchId + 1}")
-  }
+      .write.mode("overwrite").parquet(beginBatch(spark, cm(root),
+        Map("d" -> d, "w" -> w), batchId, autoCompactVersions))
 
   /** The folded counter table over every delta `<= upTo` — model-sized
     * (≤ d·w rows), exact by integer-sum associativity. */
   def readCounters(spark: SparkSession, root: String,
-      upTo: Long = Long.MaxValue): DataFrame = {
-    val versions = Versions.list(spark, root).filter(_._1 <= upTo)
-    require(versions.nonEmpty, s"no counter versions at $root")
-    foldCounters(Versions.read(spark, root, versions.map(_._2.toString)))
-  }
+      upTo: Long = Long.MaxValue): DataFrame =
+    foldCounters(cm(root).read(spark, upTo))
 
   /** Live point estimates — bit-identical to [[Profiling.countMinLookup]]
     * against a one-shot sketch of the corpus union (structural
@@ -205,7 +182,7 @@ object SketchStream {
   /** Fold counter deltas `v0..v<upTo>` into a new base (sum-merge —
     * read-equivalent by associativity). */
   def compactStoreCm(spark: SparkSession, root: String, upTo: Long): Unit =
-    Versions.compact(spark, root, upTo, foldCounters)
+    cm(root).compact(spark, upTo)
 
   // ---- bloom (membership) -------------------------------------------------
   // The MEMBERSHIP sibling — the growing-blocklist store a streaming
@@ -225,35 +202,25 @@ object SketchStream {
   /** Write the standing blocklist's set-bit relation as `root/v0`. */
   def writeStandingBloom(spark: SparkSession, root: String,
       standing: DataFrame, keyCol: String, k: Int = 4,
-      m: Int = 1 << 16): Unit = {
-    guardStandingWrite(spark, root)
-    writeParams(spark, root, Map("k" -> k, "m" -> m))
-    Profiling.bloomBits(standing, keyCol, k, m)
-      .write.mode("overwrite").parquet(s"$root/v0")
-  }
+      m: Int = 1 << 16): Unit =
+    writeSketch(spark, bloom(root), Map("k" -> k, "m" -> m),
+      Profiling.bloomBits(standing, keyCol, k, m))
 
   /** The `foreachBatch` callback for the bloom store: the batch's new
-    * set bits → `root/v{batchId+1}`, under the family's guards. */
+    * set bits → `root/v{batchId+1}`. */
   def advanceBatchBloom(spark: SparkSession, root: String, keyCol: String,
       k: Int = 4, m: Int = 1 << 16,
       autoCompactVersions: Option[Int] = None)(
-      batch: DataFrame, batchId: Long): Unit = {
-    guardStore(spark, root, batchId)
-    checkParams(spark, root, Map("k" -> k, "m" -> m))
-    autoCompactVersions.foreach(n =>
-      Versions.autoCompact(spark, root, batchId, n, foldBits))
+      batch: DataFrame, batchId: Long): Unit =
     Profiling.bloomBits(batch, keyCol, k, m)
-      .write.mode("overwrite").parquet(s"$root/v${batchId + 1}")
-  }
+      .write.mode("overwrite").parquet(beginBatch(spark, bloom(root),
+        Map("k" -> k, "m" -> m), batchId, autoCompactVersions))
 
   /** The folded set-bit relation over every delta `<= upTo` — model-sized,
     * exact by set-union associativity (and idempotent besides). */
   def readBloomBits(spark: SparkSession, root: String,
-      upTo: Long = Long.MaxValue): DataFrame = {
-    val versions = Versions.list(spark, root).filter(_._1 <= upTo)
-    require(versions.nonEmpty, s"no bloom versions at $root")
-    foldBits(Versions.read(spark, root, versions.map(_._2.toString)))
-  }
+      upTo: Long = Long.MaxValue): DataFrame =
+    foldBits(bloom(root).read(spark, upTo))
 
   /** Live prefilter: rows of `probes` whose `keyCol` MIGHT be in the
     * maintained set (no false negatives — a true member always passes).
@@ -271,7 +238,7 @@ object SketchStream {
   /** Fold bit deltas `v0..v<upTo>` into a new base (distinct-union —
     * read-identical by idempotent set semantics). */
   def compactStoreBloom(spark: SparkSession, root: String, upTo: Long): Unit =
-    Versions.compact(spark, root, upTo, foldBits)
+    bloom(root).compact(spark, upTo)
 
   /** Saturation signal — the bloom's drift metric, as bounds drift is the
     * quantile store's and per-cell growth the IVF index's: per hash row,
@@ -317,9 +284,7 @@ object SketchStream {
   def rebuildBloomStore(spark: SparkSession, newRoot: String,
       standing: DataFrame, keyCol: String, k: Int = 4,
       m: Int = 1 << 20): Unit = {
-    require(Versions.list(spark, newRoot).isEmpty,
-      s"rebuild target $newRoot already holds versions — rebuild writes " +
-        "a NEW root and readers swap; never rebuild into a live root")
+    Versions.requireFresh(spark, newRoot)
     writeStandingBloom(spark, newRoot, standing, keyCol, k, m)
   }
 }

@@ -117,13 +117,13 @@ object Takedown {
     * from scratch instead of from the journal. */
   def vacuumJournal(spark: SparkSession, journalRoot: String,
       retainUpTo: Long): Unit = {
-    val p = new Path(journalRoot)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.matches("[tr]\\d+"))
-      .filter(_.getPath.getName.drop(1).toLong <= retainUpTo)
-      .filter(s => fs.exists(new Path(s.getPath, "_committed")))
-      .foreach(s => fs.delete(s.getPath, true))
+    val fs = new Path(journalRoot)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    (Versions.listPrefixed(spark, journalRoot, 't') ++
+        Versions.listPrefixed(spark, journalRoot, 'r'))
+      .collect { case (b, dir) if b <= retainUpTo &&
+        fs.exists(new Path(dir, "_committed")) => dir }
+      .foreach(fs.delete(_, true))
   }
 
   /** The end-to-end refusal on the NAIVE revival path (VERDICT r15 next
@@ -150,10 +150,8 @@ object Takedown {
         .map(_.withColumn("__root", lit(root)))
     }
     if (deads.nonEmpty) {
-      val keys = ids.toDF("id").select(col("id").cast("long").as("id"))
-        .filter(col("id").isNotNull).distinct()
-      val hit = keys.join(deads.reduce(_ unionByName _), Seq("id"),
-          "inner")
+      val hit = Versions.idRelation(ids, "guardReingest")
+        .join(deads.reduce(_ unionByName _), Seq("id"), "inner")
         .limit(5).collect().map(r => (r.getLong(0), r.getString(1)))
       require(hit.isEmpty,
         s"re-ingest refused: ids ${hit.map(_._1).mkString(", ")} are " +
@@ -170,16 +168,12 @@ object Takedown {
     * favor of the journal). */
   def incomplete(spark: SparkSession, journalRoot: String,
       prefix: Char = 't'): Seq[Long] = {
-    val p = new Path(journalRoot)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.matches(s"$prefix\\d+"))
-      .filter { s =>
-        fs.exists(new Path(s.getPath, "ids/_SUCCESS")) &&
-          !fs.exists(new Path(s.getPath, "_committed"))
-      }
-      .map(_.getPath.getName.drop(1).toLong).sorted
+    val fs = new Path(journalRoot)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    Versions.listPrefixed(spark, journalRoot, prefix).collect {
+      case (b, dir) if fs.exists(new Path(dir, "ids/_SUCCESS")) &&
+        !fs.exists(new Path(dir, "_committed")) => b
+    }
   }
 
   /** Resolve `sweep` (single long-castable id column; nulls dropped,
@@ -266,18 +260,13 @@ object Takedown {
       // a journal is complete iff its parquet commit marker exists —
       // Spark writes _SUCCESS last, so its presence implies full data
       if (!fs.exists(new Path(idsPath, "_SUCCESS"))) {
-        require(sweep.schema.fields.length == 1,
-          s"${what}All takes a single id column, got " +
-            s"${sweep.schema.fieldNames.mkString(", ")}")
         // one evaluation of the sweep: the journal write IS its
         // materialization (the old checkpoint + count + write ran it
         // through three actions); the emptiness guard re-reads the
         // written footer (metadata-sized). An empty sweep deletes its
         // torn journal dir before refusing, so nothing is journaled
         // post-refusal (`incomplete` stays empty).
-        sweep.toDF("id").select(col("id").cast("long").as("id"))
-          .filter(col("id").isNotNull)
-          .distinct()
+        Versions.idRelation(sweep, s"${what}All")
           .coalesce(1).write.mode("overwrite").parquet(idsPath.toString)
         if (Versions.read(spark, s"$journalRoot#ids",
             Seq(idsPath.toString)).isEmpty) {

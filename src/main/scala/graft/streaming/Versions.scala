@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col, lit, max}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{broadcast, col, max, row_number}
 
 /** Listing and maintenance for `root/v<N>` versioned-parquet layouts — the
   * shared convention of the streaming maintenance loops
@@ -314,9 +315,7 @@ object Versions {
       batchId: Long, lease: Option[Lease] = None): Unit = {
     checkWriter(spark, root, lease)
     require(ids.nonEmpty, "tombstone of an empty id set")
-    require(list(spark, root).exists(_._1 == 0L),
-      s"tombstone refused: $root/v0 missing — the store must exist before " +
-        "ids can be retracted from it")
+    requireRetractable(spark, root)
     import spark.implicits._
     ids.toDF("id").coalesce(1)
       .write.mode("overwrite").parquet(s"$root/d$batchId")
@@ -339,15 +338,8 @@ object Versions {
   def tombstoneFrom(spark: SparkSession, root: String, ids: DataFrame,
       batchId: Long, lease: Option[Lease] = None): Unit = {
     checkWriter(spark, root, lease)
-    require(ids.schema.fields.length == 1,
-      s"tombstoneFrom takes a single id column, got ${ids.schema.fieldNames
-        .mkString(", ")}")
-    require(list(spark, root).exists(_._1 == 0L),
-      s"tombstone refused: $root/v0 missing — the store must exist before " +
-        "ids can be retracted from it")
-    // ids that cast to null (a wrong-typed sweep column) would survive
-    // distinct() and satisfy the non-empty guard while masking nothing —
-    // the exact forever-read waste the empty-set refusal exists to prevent.
+    val rel = idRelation(ids, "tombstoneFrom")
+    requireRetractable(spark, root)
     // r17: the sweep is evaluated ONCE, by the marker write itself (the
     // old checkpoint + count + write ran it through three actions); the
     // emptiness guard re-reads the written footer (metadata-sized). An
@@ -357,9 +349,6 @@ object Versions {
     // (NOT Dataset.observe: instantiating the session's ObservationManager
     // makes every later closure that captures the SparkSession
     // unserializable — it poisoned Similarity's typed top-k aggregator.)
-    val rel = ids.toDF("id").select(col("id").cast("long").as("id"))
-      .filter(col("id").isNotNull)
-      .distinct()
     val dir = s"$root/d$batchId"
     rel.coalesce(1).write.mode("overwrite").parquet(dir)
     if (read(spark, s"$root#d", Seq(dir)).isEmpty) {
@@ -411,13 +400,35 @@ object Versions {
   def revive(spark: SparkSession, root: String, ids: DataFrame,
       batchId: Long, lease: Option[Lease] = None): Unit = {
     checkWriter(spark, root, lease)
-    require(ids.schema.fields.length == 1,
-      s"revive takes a single id column, got ${ids.schema.fieldNames
-        .mkString(", ")}")
-    val rel = ids.toDF("id").select(col("id").cast("long").as("id"))
-      .filter(col("id").isNotNull)
-      .distinct().localCheckpoint(true)
+    val rel = idRelation(ids, "revive").localCheckpoint(true)
     require(rel.limit(1).count() > 0, "revive of an empty id set")
+    requireDeadBefore(spark, root, rel, batchId)
+    rel.coalesce(1).write.mode("overwrite").parquet(s"$root/r$batchId")
+  }
+
+  /** The id hygiene of every takedown/revive verb: `ids` is a single
+    * long-castable column (any name); nulls drop — an id that casts to
+    * null would satisfy the non-empty guard while masking nothing — and
+    * duplicates collapse. Returns the plan (column `id`). */
+  def idRelation(ids: DataFrame, verb: String): DataFrame = {
+    require(ids.schema.fields.length == 1,
+      s"$verb takes a single id column, got ${ids.schema.fieldNames
+        .mkString(", ")}")
+    ids.toDF("id").select(col("id").cast("long").as("id"))
+      .filter(col("id").isNotNull).distinct()
+  }
+
+  /** Ids can be retracted only from a store that exists (`v0`). */
+  def requireRetractable(spark: SparkSession, root: String): Unit =
+    require(list(spark, root).exists(_._1 == 0L),
+      s"tombstone refused: $root/v0 missing — the store must exist before " +
+        "ids can be retracted from it")
+
+  /** Every revived id must be DEAD as of the markers strictly before
+    * `batchId` — redelivery-stable, since a batch's own markers are
+    * ignored ([[revive]]'s contract). */
+  def requireDeadBefore(spark: SparkSession, root: String, rel: DataFrame,
+      batchId: Long): Unit = {
     val dead = deadSet(spark, root, upTo = batchId - 1)
     require(dead.isDefined,
       s"revive refused: no tombstones at $root — nothing to revive")
@@ -427,7 +438,6 @@ object Versions {
       s"revive refused: ids ${notDead.mkString(", ")} are not taken down " +
         s"at $root as of batch ${batchId - 1} (already live, never " +
         "retracted, or physically compacted away)")
-    rel.coalesce(1).write.mode("overwrite").parquet(s"$root/r$batchId")
   }
 
   /** The ids dead at `upTo` — tombstoned and not since revived (per id,
@@ -594,23 +604,8 @@ object Versions {
     val merged = versions.filter(_._1 <= upTo)
     require(merged.size >= 2 || (allowSingle && merged.nonEmpty),
       s"nothing to compact at $root: ${merged.size} version(s) <= v$upTo")
-    if (tombstoneIdCol.isDefined) {
-      // physical deletion is final: a revive marker newer than the bound
-      // whose tombstone this fold would consume becomes a permanent
-      // no-op (its rows are about to be dropped) — refuse loud
-      val pending = listRevives(spark, root).filter(_._1 > upTo)
-      if (pending.nonEmpty) deadSet(spark, root, upTo).foreach { dead =>
-        val orphaned = read(spark, s"$root#d",
-            pending.map(_._2.toString)).select(col("id"))
-          .join(dead, Seq("id"), "left_semi")
-          .limit(5).collect().map(_.getLong(0))
-        require(orphaned.isEmpty,
-          s"compact($root, upTo=$upTo) refused: ids " +
-            s"${orphaned.mkString(", ")} have a revive marker newer than " +
-            "the bound but would be physically dropped here — raise upTo " +
-            "past the revive or withdraw it")
-      }
-    }
+    if (tombstoneIdCol.isDefined)
+      requireNoOrphanedRevive(spark, root, upTo, s"compact($root, upTo=$upTo)")
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
     val tmp = new Path(rootPath, ".compact_tmp")
@@ -636,4 +631,53 @@ object Versions {
         .filter(_._1 <= upTo)
         .foreach { case (_, p) => fs.delete(p, true) }
   }
+
+  /** Physical deletion is final: refuse a fold `<= upTo` that would drop
+    * the rows of an id whose revive marker is newer than the bound (the
+    * revive would become a permanent no-op). `verb` names the refused
+    * call; multi-root stores run this before their FIRST physical step. */
+  def requireNoOrphanedRevive(spark: SparkSession, root: String,
+      upTo: Long, verb: String): Unit = {
+    val pending = listRevives(spark, root).filter(_._1 > upTo)
+    if (pending.nonEmpty) deadSet(spark, root, upTo).foreach { dead =>
+      val orphaned = read(spark, s"$root#d", pending.map(_._2.toString))
+        .select(col("id")).join(dead, Seq("id"), "left_semi")
+        .limit(5).collect().map(_.getLong(0))
+      require(orphaned.isEmpty,
+        s"$verb refused: ids ${orphaned.mkString(", ")} have a revive " +
+          "marker newer than the bound but would be physically dropped " +
+          "here — raise upTo past the revive or withdraw it")
+    }
+  }
+
+  // --- shared store guards and folds ----------------------------------------
+
+  /** A frozen MODEL root (an IVF bank, a PQ codebook, quantile bounds)
+    * must hold exactly `v0`: deltas built under one model and read under
+    * another are silently garbage, so growing past the model means a
+    * rebuild into NEW roots, never a mutation. */
+  def requireFrozen(spark: SparkSession, root: String, noun: String): Unit = {
+    val versions = list(spark, root).map(_._1)
+    require(versions == Seq(0L),
+      s"$noun at $root must be exactly v0 (found " +
+        s"${versions.map("v" + _).mkString(", ")}) — a store is bound to " +
+        s"the $noun it was built under; rebuild into NEW roots, never " +
+        s"mutate a live $noun")
+  }
+
+  /** A rebuild target must be empty: rebuild writes a NEW root and readers
+    * swap (rollback is "don't swap"); rebuilding into a live root is the
+    * in-place mutation [[requireFrozen]] exists to prevent. */
+  def requireFresh(spark: SparkSession, root: String): Unit =
+    require(list(spark, root).isEmpty,
+      s"rebuild target $root already holds versions — rebuild writes a " +
+        "NEW root and readers swap; never rebuild into a live root")
+
+  /** Each key's newest row — the highest `__v` per `keys`: the carried-
+    * state read and the superseded-row compaction fold of the
+    * `__v`-versioned stores (funnel, EWMA, k-means, cluster). */
+  def newestBy(keys: String*)(df: DataFrame): DataFrame =
+    df.withColumn("__rn", row_number().over(
+        Window.partitionBy(keys.map(col): _*).orderBy(col("__v").desc)))
+      .filter(col("__rn") === 1).drop("__rn")
 }

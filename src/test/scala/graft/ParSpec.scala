@@ -10,6 +10,18 @@ import graft.streaming.Versions
   * and writer-lease propagation onto the worker threads. */
 class ParSpec extends SparkSpec {
 
+  test("SPARK_GRAFT_PAR_CAP parses loud: unset is 4, 0 is sequential, a " +
+      "malformed value names the variable and the value") {
+    assert(Par.parseCap(None) === 4)
+    assert(Par.parseCap(Some("0")) === 0)
+    assert(Par.parseCap(Some("6")) === 6)
+    Seq("four", "-1", "2.5", "").foreach { v =>
+      val e = intercept[IllegalArgumentException](Par.parseCap(Some(v)))
+      assert(e.getMessage.contains("SPARK_GRAFT_PAR_CAP") &&
+        e.getMessage.contains(s"'$v'"), e.getMessage)
+    }
+  }
+
   test("eval returns results in argument order, actions run concurrently") {
     val gate = new java.util.concurrent.CountDownLatch(3)
     // each thunk blocks until all three have STARTED — passes only if
